@@ -212,7 +212,7 @@ object Bench {
     * stall-sensitive reading (r4: approx 9.48 s one-off; r5: approx 3.41
     * vs steady-state 1.7) — a single co-timed stall inverts the verdict
     * the pair exists to deliver. Four reps bound that risk; steady-state
-    * reproductions (5-rep BenchOne, r6) give approx 1.66–1.88 s vs exact
+    * reproductions (5 warm reps, r6) give approx 1.66–1.88 s vs exact
     * 1.94–2.68 s. d2_minhash_lsh joined in round 7: its driver readings
     * moved 0.5 → 3.2 s across rounds on unchanged code (adjudicated as
     * a testdata-profile shift, r6 verdict), and as the feeder of
@@ -450,11 +450,13 @@ object Bench {
     * (round-12 advice) t4 a hair above t1 fabricates an arbitrarily
     * huge marginal from pure jitter — both report marginal = -1 and
     * fall back to fixed = t1/batches. 10% minimum separation ≈ 3× the
-    * observed sub-second jitter on these multi-second readings.
+    * observed sub-second jitter on these multi-second readings. A
+    * failed run (-1) on either volume reports -1 for both terms.
     */
   private[graft] def volumeSplit(t1: Double, t4: Double, r: Double,
                                  nBatches: Double): (Double, Double) =
-    if (t4 > 1.1 * t1) {
+    if (t1 < 0 || t4 < 0) (-1.0, -1.0)
+    else if (t4 > 1.1 * t1) {
       val marginal = 3.0 * r / (t4 - t1)
       ((t1 - r / marginal) / nBatches, marginal)
     } else (t1 / nBatches, -1.0)
@@ -525,18 +527,25 @@ object Bench {
   final case class Metric(name: String, value: Double,
                           seconds: Boolean = true)
 
+  /** The one timer: wall seconds of `f`, or -1 (logged under `label`)
+    * when it throws — a failed reading stays in the artifact as -1
+    * instead of discarding the completed ones. Throwable, not NonFatal:
+    * a StackOverflowError from one deep plan must read -1, never cost
+    * the headline line.
+    */
+  private def time(label: String)(f: => Unit): (String, Double) =
+    try {
+      val t0 = System.nanoTime(); f
+      label -> (System.nanoTime() - t0) / 1e9
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] $label failed: ${e.getMessage}")
+        label -> -1.0
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     // Full untimed warm-up pass: whole-stage-codegen class generation +
     // JIT compilation is a one-time per-plan cost (~8s observed on the
@@ -579,17 +588,8 @@ object Bench {
     val suspects = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = (headline ++ extended).flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              -1.0
-          }
-        }
+        def once(): Double =
+          time(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2
         // min of two: one host stall (GC pause, CPU steal) must not read
         // as a plan regression — a -1 failure is only reported when both
         // attempts fail. The stall-sensitive c7 pair gets four reps.
@@ -736,7 +736,7 @@ object Bench {
     * walk adaptive stages, dedup shared stage objects, skip reused
     * exchanges (their metrics alias the original's). The wire-cost
     * instrument behind the j1 `_mb` twins and the d14/d22 scaling
-    * measurements (graft.ScaleProbe).
+    * measurements (`graft.tools.Probe scale`).
     */
   private[graft] def shuffleWriteMb(df: org.apache.spark.sql.DataFrame): Double =
     shuffleWriteMbAndRows(df)._1
@@ -910,15 +910,6 @@ object Bench {
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.functions._
     import graft.sources.Tables
-    def time(label: String)(f: => Unit): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); f
-        label -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-      }
     val base = new org.apache.hadoop.fs.Path(
       System.getProperty("java.io.tmpdir"), "graft_bench_zorder")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1011,15 +1002,6 @@ object Bench {
                           sfDir: String): Seq[Metric] = {
     import org.apache.spark.sql.functions._
     import graft.sources.Tables
-    def time(label: String)(f: => Unit): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); f
-        label -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-      }
     val base = new org.apache.hadoop.fs.Path(
       System.getProperty("java.io.tmpdir"), "graft_bench_layout")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1098,15 +1080,6 @@ object Bench {
                                   sfDir: String): Seq[Metric] = {
     import org.apache.spark.sql.functions._
     import graft.sources.Tables
-    def time(label: String)(f: => Unit): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); f
-        label -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-      }
     val base = new org.apache.hadoop.fs.Path(
       System.getProperty("java.io.tmpdir"), "graft_bench_prune")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1184,15 +1157,6 @@ object Bench {
   private def columnPruneStudy(spark: SparkSession,
                                sfDir: String): Seq[Metric] = {
     import org.apache.spark.sql.functions._
-    def time(label: String)(f: => Unit): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); f
-        label -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-      }
     val docs = s"$sfDir/documents.parquet"
     def scan(sizeCol: org.apache.spark.sql.Column): Long =
       spark.read.parquet(docs)
@@ -1235,15 +1199,6 @@ object Bench {
                               sfDir: String): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
     import graft.sources.Tables
-    def time(label: String)(f: => Unit): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); f
-        label -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-      }
     val dir = new org.apache.hadoop.fs.Path(
       System.getProperty("java.io.tmpdir"), "graft_bench_compact")
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1305,15 +1260,6 @@ object Bench {
                          sfDir: String): Seq[Metric] = {
     import org.apache.spark.sql.functions._
     import graft.sources.Tables
-    def time(label: String)(f: => Unit): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); f
-        label -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-      }
     val base = new org.apache.hadoop.fs.Path(
       System.getProperty("java.io.tmpdir"), "graft_bench_codec")
     val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1370,15 +1316,6 @@ object Bench {
     import org.apache.spark.sql.functions.col
     import graft.operators.Similarity
     import graft.sources.Tables
-    def time(label: String)(f: => Unit): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); f
-        label -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-      }
     try {
       val tmp = java.nio.file.Files.createTempDirectory("graft_bench_ann").toString
       val emb = Tables.table(spark, sfDir, "embeddings")
@@ -1468,26 +1405,19 @@ object Bench {
         docs.filter(col("doc_id") % 10 === 3))
       val schema = StructType(Seq(StructField("doc_id", LongType),
         StructField("ts", TimestampType), StructField("text", StringType)))
-      def run(label: String): (String, Double) =
-        try {
-          val t0 = System.nanoTime()
-          val admitted = CurationStream.curationGate(
-            spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 4).json(s"$tmp/in"), bloom)
-          val q = admitted.writeStream
-            .option("checkpointLocation", s"$tmp/ckpt_$label")
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.write.format("noop").mode("overwrite").save()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          label -> (System.nanoTime() - t0) / 1e9
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $label failed: ${e.getMessage}")
-            label -> -1.0
-        }
+      def run(label: String): (String, Double) = time(label) {
+        val admitted = CurationStream.curationGate(
+          spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 4).json(s"$tmp/in"), bloom)
+        admitted.writeStream
+          .option("checkpointLocation", s"$tmp/ckpt_$label")
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.write.format("noop").mode("overwrite").save()
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
       val cleanup = () =>
         try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
         catch { case scala.util.control.NonFatal(_) => }
@@ -1531,26 +1461,19 @@ object Bench {
         .write.json(s"$tmp/emb_in")
       val embSchema = StructType(Seq(StructField("vec_id", LongType),
         StructField("embedding", ArrayType(FloatType))))
-      def runEmb(label: String): (String, Double) =
-        try {
-          val t0 = System.nanoTime()
-          val admitted = graft.streaming.CurationStream.embedNearDupGate(
-            spark.readStream.schema(embSchema)
-              .option("maxFilesPerTrigger", 4).json(s"$tmp/emb_in"), emb)
-          val q = admitted.writeStream
-            .option("checkpointLocation", s"$tmp/ckpt_$label")
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              b.write.format("noop").mode("overwrite").save()
-            }
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          label -> (System.nanoTime() - t0) / 1e9
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"[bench] $label failed: ${e.getMessage}")
-            label -> -1.0
-        }
+      def runEmb(label: String): (String, Double) = time(label) {
+        val admitted = graft.streaming.CurationStream.embedNearDupGate(
+          spark.readStream.schema(embSchema)
+            .option("maxFilesPerTrigger", 4).json(s"$tmp/emb_in"), emb)
+        admitted.writeStream
+          .option("checkpointLocation", s"$tmp/ckpt_$label")
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+            b.write.format("noop").mode("overwrite").save()
+          }
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+      }
       runEmb("warmup_embgate")
       // distinct labels per rep (checkpoint dir is label-keyed, above)
       val ts = Seq(runEmb("h11_embgate_r1"), runEmb("h11_embgate_r2"))
@@ -1718,17 +1641,8 @@ object Bench {
         }
         val batch = scalingSet.flatMap { case (name, _) =>
           SparkEntry.queries.get(name).map { fn =>
-            def once(): Double = {
-              val t0 = System.nanoTime()
-              try {
-                fn(spark, dir).write.format("noop").mode("overwrite").save()
-                (System.nanoTime() - t0) / 1e9
-              } catch {
-                case scala.util.control.NonFatal(e) =>
-                  System.err.println(s"[bench] scaling $name@$sf failed: ${e.getMessage}")
-                  -1.0
-              }
-            }
+            def once(): Double = time(s"scaling $name@$sf")(
+              fn(spark, dir).write.format("noop").mode("overwrite").save())._2
             // min of two, mirroring the main pass (four for the c7
             // pair): the exponent divides two measurements, so ONE
             // stalled run would corrupt it
@@ -1804,15 +1718,6 @@ object Bench {
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n"), sum(col("l_extendedprice")).as("v"))
-    def time(label: String)(f: => Unit): (String, Double) =
-      try {
-        val t0 = System.nanoTime(); f
-        label -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-          label -> -1.0
-      }
     // DROP TABLE only clears THIS session's in-memory catalog; a table
     // directory orphaned by a previous Bench process survives it, and
     // saveAsTable then refuses the non-empty location. Delete the
@@ -1937,21 +1842,15 @@ object Bench {
           .write.format("noop").mode("overwrite").save()
       // warm-up build absorbs codegen/JIT; the timed build replaces it
       Dedup.buildSetSimIndex(base, "graft_bench_ssidx")
-      val t0 = System.nanoTime()
-      Dedup.buildSetSimIndex(base, "graft_bench_ssidx")
-      val tBuild = (System.nanoTime() - t0) / 1e9
+      val build = time("d23b_index_build")(Dedup.buildSetSimIndex(base, "graft_bench_ssidx"))
       deltaRun() // warm-up
-      val t1 = System.nanoTime()
-      deltaRun()
-      val tDelta = (System.nanoTime() - t1) / 1e9
+      val deltaOnly = time("d23b_delta_only")(deltaRun())
       // the absorb price (shingle+rank the delta, two appends) — its
       // shingle/rank plan is already JIT-warm from the build/delta runs;
       // the append mutates the index, which nothing reads afterwards
-      val t2 = System.nanoTime()
-      Dedup.refreshSetSimIndex(spark, "graft_bench_ssidx", delta)
-      val tRefresh = (System.nanoTime() - t2) / 1e9
-      Seq(Metric("d23b_index_build", tBuild), Metric("d23b_delta_only", tDelta),
-        Metric("d23c_index_refresh", tRefresh))
+      val refresh = time("d23c_index_refresh")(
+        Dedup.refreshSetSimIndex(spark, "graft_bench_ssidx", delta))
+      Seq(build, deltaOnly, refresh).map(m => Metric(m._1, m._2))
     } catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] setsim index study failed: ${e.getMessage}")
@@ -2013,13 +1912,10 @@ object Bench {
       val schema = spark.read.parquet(s"$tmp/in1").schema
       def stream(vol: Int) = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 4 * vol).parquet(s"$tmp/in$vol")
-      def timed(run: => Unit): Double = {
-        val t0 = System.nanoTime(); run; (System.nanoTime() - t0) / 1e9
-      }
-      val tCms1 = timed(graft.streaming.SketchStream.maintainCms(stream(1),
-        "user_id", s"$tmp/cms_cells", s"$tmp/cms_ckpt").awaitTermination())
-      val tCms4 = timed(graft.streaming.SketchStream.maintainCms(stream(4),
-        "user_id", s"$tmp/cms_cells4", s"$tmp/cms_ckpt4").awaitTermination())
+      val tCms1 = time("h12_cms_x1")(graft.streaming.SketchStream.maintainCms(stream(1),
+        "user_id", s"$tmp/cms_cells", s"$tmp/cms_ckpt").awaitTermination())._2
+      val tCms4 = time("h12_cms_x4")(graft.streaming.SketchStream.maintainCms(stream(4),
+        "user_id", s"$tmp/cms_cells4", s"$tmp/cms_ckpt4").awaitTermination())._2
       val (cmsFix, cmsMarg) = split(tCms1, tCms4, nRows)
       val cmsCells = spark.read.parquet(s"$tmp/cms_cells").count().toDouble
       val b = ev.filter(col("value").isNotNull)
@@ -2027,8 +1923,8 @@ object Bench {
       def driftRun(vol: Int) = graft.streaming.DriftStream.maintainDriftCells(
         stream(vol).select(col("value")), b.getDouble(0), b.getDouble(1),
         s"$tmp/drift_cells$vol", s"$tmp/drift_ckpt$vol").awaitTermination()
-      val tDrift1 = timed(driftRun(1))
-      val tDrift4 = timed(driftRun(4))
+      val tDrift1 = time("h17_drift_x1")(driftRun(1))._2
+      val tDrift4 = time("h17_drift_x4")(driftRun(4))._2
       val (driftFix, driftMarg) = split(tDrift1, tDrift4, nRows)
       val driftCells = spark.read.parquet(s"$tmp/drift_cells1").count().toDouble
       // H20: vector-index delta maintenance — the embeddings corpus
@@ -2042,10 +1938,10 @@ object Bench {
       val embSchema = spark.read.parquet(s"$tmp/ivf_in1").schema
       def ivfRun(vol: Int): Double = {
         graft.operators.Similarity.buildIvfIndex(emb, s"$tmp/ivf$vol")
-        timed(graft.streaming.IndexStream.maintainIvfIndex(
+        time(s"h20_ivf_x$vol")(graft.streaming.IndexStream.maintainIvfIndex(
           spark.readStream.schema(embSchema).option("maxFilesPerTrigger", 4 * vol)
             .parquet(s"$tmp/ivf_in$vol"),
-          s"$tmp/ivf$vol", s"$tmp/ivf_ckpt$vol").awaitTermination())
+          s"$tmp/ivf$vol", s"$tmp/ivf_ckpt$vol").awaitTermination())._2
       }
       val tIvf1 = ivfRun(1)
       val tIvf4 = ivfRun(4)
@@ -2129,27 +2025,24 @@ object Bench {
       def in(dir: String, schema: org.apache.spark.sql.types.StructType,
              mft: Int) = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", mft).parquet(dir)
-      def timed(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
       def mergedCells(dir: String): Double = spark.read.parquet(dir)
         .select(col("ship_day"), col("bucket")).distinct().count().toDouble
-      val t33a = timed(SketchStream.maintainDailyHll(
+      val t33a = time("h33_vol_x1")(SketchStream.maintainDailyHll(
         in(s"$tmp/li1", liSchema, 4), "l_orderkey", "ship_day",
         s"$tmp/c33a", s"$tmp/k33a").awaitTermination())
-      val t33b = timed(SketchStream.maintainDailyHll(
+      val t33b = time("h33_vol_x4")(SketchStream.maintainDailyHll(
         in(s"$tmp/li4", liSchema, 16), "l_orderkey", "ship_day",
         s"$tmp/c33b", s"$tmp/k33b").awaitTermination())
-      val t34a = timed(SketchStream.maintainDailyHist(
+      val t34a = time("h34_vol_x1")(SketchStream.maintainDailyHist(
         in(s"$tmp/li1", liSchema, 4), "l_extendedprice", "ship_day", lo, hi,
         s"$tmp/c34a", s"$tmp/k34a").awaitTermination())
-      val t34b = timed(SketchStream.maintainDailyHist(
+      val t34b = time("h34_vol_x4")(SketchStream.maintainDailyHist(
         in(s"$tmp/li4", liSchema, 16), "l_extendedprice", "ship_day", lo, hi,
         s"$tmp/c34b", s"$tmp/k34b").awaitTermination())
-      val t35a = timed(SketchStream.maintainSampleCells(
+      val t35a = time("h35_vol_x1")(SketchStream.maintainSampleCells(
         in(s"$tmp/d1", dSchema, 4), 100, s"$tmp/c35a", s"$tmp/k35a")
         .awaitTermination())
-      val t35b = timed(SketchStream.maintainSampleCells(
+      val t35b = time("h35_vol_x4")(SketchStream.maintainSampleCells(
         in(s"$tmp/d4", dSchema, 16), 100, s"$tmp/c35b", s"$tmp/k35b")
         .awaitTermination())
       val c33a = mergedCells(s"$tmp/c33a")
@@ -2169,9 +2062,7 @@ object Bench {
           s"x1=$c34a x4=$c34b bound=${nDays * 64}")
       require(s35a == s35b,
         s"h35 sample state must be batches*k on both volumes: x1=$s35a x4=$s35b")
-      Seq(Metric("h33_vol_x1", t33a), Metric("h33_vol_x4", t33b),
-        Metric("h34_vol_x1", t34a), Metric("h34_vol_x4", t34b),
-        Metric("h35_vol_x1", t35a), Metric("h35_vol_x4", t35b),
+      Seq(t33a, t33b, t34a, t34b, t35a, t35b).map(m => Metric(m._1, m._2)) ++ Seq(
         Metric("h33_cells_x1", c33a, seconds = false),
         Metric("h33_cells_x4", c33b, seconds = false),
         Metric("h33_occupancy_x1", c33a / hllBound, seconds = false),
@@ -2260,44 +2151,41 @@ object Bench {
         // run returns (label, seconds, stateRows): stateRows is the last
         // micro-batch's total state-store rows for the stateful (trend)
         // path — the state-growth axis of the volume study below
+        // a pinned state width runs the stream on a session CLONE (the
+        // component/PageRank loop mechanism): the shared session's conf
+        // is never mutated, and the static sides stay its cached frames
         def run(label: String, maxFilesPerTrigger: Int,
                 trend: Boolean = false,
                 shufflePartitions: Option[Int] = None,
-                inDir: String = s"$tmp/in"): (String, Double, Double) =
-          try {
-            val prevSp = spark.conf.get("spark.sql.shuffle.partitions")
-            shufflePartitions.foreach(n =>
-              spark.conf.set("spark.sql.shuffle.partitions", n))
-            try {
-              val t0 = System.nanoTime()
-              val scored = graft.streaming.FraudStream
-                .scoredStream(Tables.readCsvStream(spark, inDir,
-                  Tables.transactionSchema, maxFilesPerTrigger), users, products)
-              val out =
-                if (trend) graft.streaming.FraudStream.userSpendTrend(scored)
-                else scored
-              val writer = out.writeStream
-                .option("checkpointLocation", s"$tmp/ckpt_$label")
-                .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-                  b.write.format("noop").mode("overwrite").save()
-                }
-              val q = (if (trend) writer.outputMode("update") else writer)
-                .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                .start()
-              q.awaitTermination()
-              val secs = (System.nanoTime() - t0) / 1e9
-              val stateRows = Option(q.lastProgress)
-                .map(_.stateOperators.map(_.numRowsTotal.toDouble).sum)
-                .getOrElse(-1.0)
-              (label, secs, stateRows)
-            } finally {
-              spark.conf.set("spark.sql.shuffle.partitions", prevSp)
-            }
-          } catch {
-            case scala.util.control.NonFatal(e) =>
-              System.err.println(s"[bench] $label failed: ${e.getMessage}")
-              (label, -1.0, -1.0)
+                inDir: String = s"$tmp/in"): (String, Double, Double) = {
+          val session = shufflePartitions.fold(spark) { n =>
+            val clone = org.apache.spark.sql.GraftShims.cloneSession(spark)
+            clone.conf.set("spark.sql.shuffle.partitions", n.toString)
+            clone
           }
+          var q: org.apache.spark.sql.streaming.StreamingQuery = null
+          val (_, secs) = time(label) {
+            val scored = graft.streaming.FraudStream
+              .scoredStream(Tables.readCsvStream(session, inDir,
+                Tables.transactionSchema, maxFilesPerTrigger), users, products)
+            val out =
+              if (trend) graft.streaming.FraudStream.userSpendTrend(scored)
+              else scored
+            val writer = out.writeStream
+              .option("checkpointLocation", s"$tmp/ckpt_$label")
+              .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+                b.write.format("noop").mode("overwrite").save()
+              }
+            q = (if (trend) writer.outputMode("update") else writer)
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+              .start()
+            q.awaitTermination()
+          }
+          val stateRows = if (secs < 0) -1.0 else Option(q.lastProgress)
+            .map(_.stateOperators.map(_.numRowsTotal.toDouble).sum)
+            .getOrElse(-1.0)
+          (label, secs, stateRows)
+        }
         // untimed warm-up runs (one per plan shape): the streaming plans
         // pay the same one-time codegen/JIT cost as the batch queries —
         // without this the first measured variant absorbs it and the

@@ -14,8 +14,7 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
   def local(cores: Int = math.min(Runtime.getRuntime.availableProcessors, 32)): SparkSession = {
-    val spark = SparkSession
-      .builder()
+    val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft")
       .config("spark.sql.shuffle.partitions", cores.toString)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
+import org.apache.spark.unsafe.array.ByteArrayMethods
 
 /** Native codegen'd unordered-pair expansion over a sorted bucket array
   * — the grouped-bucket candidate generator every banding/cell family
@@ -33,7 +34,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StructField, StructType}
   * the input array unchanged (any element type — longs, strings,
   * structs). n < 2 yields an empty array (the callers' size guard
   * makes it unreachable, but unlike `sequence(1, n-1)` nothing counts
-  * down). Works under `explode_outer` exactly like the HOF form.
+  * down). Works under `explode_outer` exactly like the HOF form. A
+  * bucket whose pair count exceeds one Spark array fails with a named
+  * error before anything is allocated (see [[PairExpand.pairCount]]).
   */
 case class PairExpand(child: Expression, aName: String, bName: String)
     extends UnaryExpression {
@@ -58,8 +61,8 @@ case class PairExpand(child: Expression, aName: String, bName: String)
   override def nullSafeEval(input: Any): Any = {
     val arr = input.asInstanceOf[ArrayData]
     val n = arr.numElements()
+    val out = new Array[Any](PairExpand.pairCount(n))
     val objs = arr.toObjectArray(elemType)
-    val out = new Array[Any](if (n < 2) 0 else n * (n - 1) / 2)
     var p = 0
     var i = 0
     while (i < n - 1) {
@@ -90,11 +93,11 @@ case class PairExpand(child: Expression, aName: String, bName: String)
         else s"(Object) $getter"
       s"""
          |final int $n = $arr.numElements();
+         |final Object[] $out = new Object[${classOf[PairExpand].getName}.pairCount($n)];
          |final Object[] $objs = new Object[$n];
          |for (int $i = 0; $i < $n; $i++) {
          |  $objs[$i] = $arr.isNullAt($i) ? null : $boxed;
          |}
-         |final Object[] $out = new Object[$n < 2 ? 0 : $n * ($n - 1) / 2];
          |int $p = 0;
          |for (int $i = 0; $i < $n - 1; $i++) {
          |  for (int $j = $i + 1; $j < $n; $j++) {
@@ -110,6 +113,23 @@ case class PairExpand(child: Expression, aName: String, bName: String)
 
   override protected def withNewChildInternal(newChild: Expression): PairExpand =
     copy(child = newChild)
+}
+
+object PairExpand {
+  /** Output length n(n-1)/2 of a bucket of n, computed in Long (the Int
+    * form wraps from n = 46,342). A count past what one Spark array can
+    * hold (n ≥ 65,537) throws a named error before anything is
+    * allocated, instead of a wrapped size's NegativeArraySizeException
+    * or out-of-bounds write.
+    */
+  def pairCount(n: Int): Int = {
+    val count = n.toLong * (n - 1) / 2
+    if (count > ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH)
+      throw new IllegalArgumentException(
+        s"bucket too large for pair expansion (n = $n): $count pairs exceed " +
+          s"the ${ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH}-element array limit")
+    count.toInt
+  }
 }
 
 /** Column-level entry point for [[PairExpand]]. */

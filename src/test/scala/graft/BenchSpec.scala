@@ -136,6 +136,9 @@ class BenchSpec extends AnyFunSuite {
     assert(margTie === -1.0 && fixTie === 2.5)
     // inversion keeps its r11 behavior
     assert(Bench.volumeSplit(10.0, 9.0, 1e6, 4.0) === ((2.5, -1.0)))
+    // a failed run on either volume never becomes a fixed-cost reading
+    assert(Bench.volumeSplit(-1.0, 9.0, 1e6, 4.0) === ((-1.0, -1.0)))
+    assert(Bench.volumeSplit(10.0, -1.0, 1e6, 4.0) === ((-1.0, -1.0)))
   }
 
   test("scaling carry-forward: decades the fresh capture lacks survive the artifact rewrite") {

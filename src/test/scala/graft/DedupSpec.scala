@@ -489,7 +489,9 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     val pairs = (1L to 64L).map(i => (s"d$i", s"d${i + 1}"))
       .toDF("doc_a", "doc_b")
     @volatile var stop = false
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    // distinct values only: the probe spins for the whole multi-round
+    // job, and the assertion reads nothing but the distinct set
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val probe = new Thread(() => {
       while (!stop) {
         seen.add(spark.conf.get("spark.sql.shuffle.partitions"))

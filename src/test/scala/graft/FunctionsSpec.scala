@@ -133,4 +133,42 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
       }
     } finally spark.conf.set("spark.sql.codegen.fallback", prevFallback)
   }
+
+  test("pair_expand past one array's capacity fails with a named error, codegen and interpreted") {
+    // n = 65,537 is the first bucket whose n(n-1)/2 pairs exceed one
+    // Spark array. The Int count wrapped from n = 46,342 on: negative
+    // sizes threw NegativeArraySizeException, and here it wraps to 32,768
+    // and overran the array. The stack trace proves each arm ran the
+    // path it forces: nullSafeEval only when interpreted.
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val n = 65537
+    // repartition defeats ConvertToLocalRelation, as above
+    val bucket = Seq((1L to n.toLong).toSeq).toDF("ids").repartition(1)
+    def failure(conf: Map[String, String]): Throwable = {
+      val prev = conf.keys.map(k => k -> spark.conf.getOption(k))
+      conf.foreach { case (k, v) => spark.conf.set(k, v) }
+      try intercept[Exception](bucket.select(size(
+        graft.functions.PairFunctions.pairExpand(col("ids"), "a", "b"))).collect())
+      finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    def named(e: Throwable): IllegalArgumentException =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+        case iae: IllegalArgumentException
+          if iae.getMessage.startsWith(s"bucket too large for pair expansion (n = $n)") => iae
+      }.getOrElse(fail(s"no named pair-expansion error in $e"))
+    def interpreted(e: Throwable): Boolean = e.getStackTrace.exists(f =>
+      f.getClassName == classOf[graft.functions.PairExpand].getName &&
+        f.getMethodName == "nullSafeEval")
+    val codegen = named(failure(Map(
+      "spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")))
+    assert(!interpreted(codegen) &&
+      codegen.getStackTrace.exists(_.getClassName.contains("GeneratedClass")))
+    val interp = named(failure(Map(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")))
+    assert(interpreted(interp))
+  }
 }

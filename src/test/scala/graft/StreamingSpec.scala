@@ -1660,13 +1660,17 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       "t3,2,10,s1,70.0,card,KENYA,2024-03-01T10:02:00.000Z"))
     val scored = FraudStream.scoredStream(
       Tables.readCsvStream(spark, in, Tables.transactionSchema), usersDf, productsDf)
-    val q = FraudStream.userSpendTrend(scored)
-      .writeStream.format("memory").queryName("trend_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // both reference trend sinks over the same scored stream
+    Seq(FraudStream.userSpendTrend(scored) -> "trend_out",
+        FraudStream.categoryTrend(scored) -> "category_trend_out").foreach {
+      case (trend, name) =>
+        trend.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", s"$ckpt/$name")
+          .outputMode("complete")
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
+    }
     val rows = spark.sql(
       "SELECT user_id, total_spent, num_transactions, window_start FROM trend_out")
       .collect()
@@ -1675,6 +1679,14 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(u1(0).getAs[Double]("total_spent") === 150.0)
     assert(u1(0).getAs[Long]("num_transactions") === 2L)
     assert(u1(0).getAs[String]("window_start") === "2024-03-01 10:00:00")
+    // all three rows are product 10 ("gadgets"): two in the 10:00
+    // window, one in 10:02
+    val gadgets = spark.sql(
+      """SELECT window_start, total_sales, num_transactions FROM category_trend_out
+        |WHERE category = 'gadgets' ORDER BY window_start""".stripMargin)
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSeq
+    assert(gadgets === Seq(("2024-03-01 10:00:00", 150.0, 2L),
+      ("2024-03-01 10:02:00", 70.0, 1L)))
   }
 
   test("H18 streaming trend cells serve the batch c6 statistic bit-identically") {
