@@ -409,13 +409,7 @@ object Tables {
                          versionDesc: Seq[Column]): Unit = {
     val spark = batch.sparkSession
     recoverCrashedSwap(spark, dir)
-    // Existence check through Spark's reader (not java.io.File): works on
-    // any Hadoop filesystem (hdfs://, s3a://, ...) and any layout —
-    // a local-FS check would misread a remote table as absent and the
-    // overwrite below would destroy it.
-    val existing =
-      try Some(spark.read.parquet(dir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val existing = readIfPresent(spark, dir)
     val merged = existing match {
       case Some(base) => mergeUpsert(base, batch, keys, versionDesc)
       case None => mergeUpsert(batch.limit(0), batch, keys, versionDesc)
@@ -469,9 +463,7 @@ object Tables {
     import graft.Cols.fmtTs
     val spark = changes.sparkSession
     recoverCrashedSwap(spark, dir)
-    val existing =
-      try Some(spark.read.parquet(dir))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val existing = readIfPresent(spark, dir)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val local = changes
       .withColumn("valid_to_ts", lead(col("ts"), 1).over(w))
@@ -569,6 +561,22 @@ object Tables {
       compacted.write.mode("overwrite")
         .partitionBy(partitionCols: _*).parquet(staging)
     }
+  }
+
+  /** The live table at `dir`, or None on a first load. Existence is
+    * asked of the table's own Hadoop filesystem (not java.io.File), so
+    * it holds for any Hadoop FS (hdfs://, s3a://, ...): a local-FS check
+    * would misread a remote table as absent and the caller's overwrite
+    * would destroy it. Asking first keeps a first load from logging the
+    * reader's missing-path trace; a directory that exists but holds no
+    * readable parquet still reads as absent.
+    */
+  private def readIfPresent(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) None
+    else
+      try Some(spark.read.parquet(dir))
+      catch { case _: org.apache.spark.sql.AnalysisException => None }
   }
 
   /** Recovery half of [[mergeIntoWarehouse]]'s swap, run BEFORE the base
@@ -1136,9 +1144,7 @@ object Tables {
     val batch = readMergedSchema(spark, sinkDir)
     // only the warehouse-existence probe may fail soft; an alignment
     // error must surface, not silently merge the unaligned batch
-    val warehouseSchema =
-      try Some(spark.read.parquet(warehouseDir).schema)
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val warehouseSchema = readIfPresent(spark, warehouseDir).map(_.schema)
     val aligned = warehouseSchema.map(alignTo(batch, _)).getOrElse(batch)
     mergeIntoWarehouse(aligned, warehouseDir, keys, versionDesc)
   }

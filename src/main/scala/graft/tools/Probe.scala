@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,8 +15,12 @@ import graft.sources.Tables
   *
   * `names` is comma-separated; `--all` selects every query.
   *  - `time`: one untimed warm-up pass, then `reps` (default 3) measured
-  *    passes through the noop sink; prints every rep and each query's
-  *    min. The warm-up is never a reading (codegen + JIT land there).
+  *    passes through the noop sink; prints every rep with the classes
+  *    Janino compiled during it (`compiled=N`), then each query's min.
+  *    The warm-up takes the first codegen and JIT; a rep is warm only
+  *    if it compiled nothing, which holds while the selection's
+  *    generated classes fit in Spark's codegen cache and the query
+  *    bakes no per-run literal into its generated code.
   *  - `explain`: executes each query and prints its finalized physical
   *    plan (the AQE final plan, initial plan cut off) and its length.
   *  - `plansize`: chars of each query's pre-execution physical plan,
@@ -56,19 +61,22 @@ object Probe {
 
   private def time(spark: SparkSession, sfDir: String, selected: Seq[Query],
                    reps: Int): Unit = {
-    def once(fn: (SparkSession, String) => DataFrame): Double = {
+    // seconds and classes compiled (the JVM-wide Janino counter)
+    def once(fn: (SparkSession, String) => DataFrame): (Double, Long) = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      ((System.nanoTime() - t0) / 1e9,
+        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
     }
     selected.foreach { case (n, fn) =>
-      once(fn)
-      println(f"$n%-32s warm-up (untimed)")
+      val (_, c) = once(fn)
+      println(f"$n%-32s warm-up (untimed) compiled=$c")
     }
     val readings = (1 to reps).flatMap { r =>
       selected.map { case (n, fn) =>
-        val t = once(fn)
-        println(f"$n%-32s rep$r $t%8.3f s")
+        val (t, c) = once(fn)
+        println(f"$n%-32s rep$r $t%8.3f s compiled=$c")
         n -> t
       }
     }

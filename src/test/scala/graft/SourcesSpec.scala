@@ -799,6 +799,19 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
     assert(m === Map(1 -> "a", 2 -> "b2"), "pre-crash rows must survive the replay")
   }
 
+  test("C9d mergeIntoWarehouse first load: a missing table and an empty directory both load the batch") {
+    import spark.implicits._
+    val b0 = Seq((1, "a", 1L), (2, "b", 1L)).toDF("id", "v", "version")
+    val missing = tmpDir("graft_first") + "/tbl"
+    val empty = tmpDir("graft_first_empty") // exists, holds no parquet
+    for (dir <- Seq(missing, empty)) {
+      Tables.mergeIntoWarehouse(b0, dir, Seq("id"), Seq(col("version")))
+      val m = spark.read.parquet(dir).collect()
+        .map(r => r.getAs[Int]("id") -> r.getAs[String]("v")).toMap
+      assert(m === Map(1 -> "a", 2 -> "b"), dir)
+    }
+  }
+
   test("C9 mergeUpsert is idempotent and keeps the newest version") {
     import spark.implicits._
     val base = Seq((1, "old", 1L), (2, "keep", 5L)).toDF("id", "v", "version")
