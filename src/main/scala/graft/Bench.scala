@@ -2151,9 +2151,10 @@ object Bench {
         // run returns (label, seconds, stateRows): stateRows is the last
         // micro-batch's total state-store rows for the stateful (trend)
         // path — the state-growth axis of the volume study below
-        // a pinned state width runs the stream on a session CLONE (the
-        // component/PageRank loop mechanism): the shared session's conf
-        // is never mutated, and the static sides stay its cached frames
+        // a pinned state width runs the stream on a session CLONE: the
+        // state width is read from conf at the first checkpoint, so it
+        // must be set, but the shared session's conf is never mutated,
+        // and the static sides stay its cached frames
         def run(label: String, maxFilesPerTrigger: Int,
                 trend: Boolean = false,
                 shufflePartitions: Option[Int] = None,

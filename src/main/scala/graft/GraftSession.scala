@@ -25,11 +25,11 @@ import org.apache.spark.sql.SparkSession
   *
   * The cache is keyed by class loader as well as by code, and with
   * per-session artifact isolation (Spark's default) every session gets
-  * its own executor class loader, so the loops that narrow their
-  * shuffle width on a fresh clone of the session (PageRank, components)
-  * would miss the cache and recompile on every run. graft adds no
-  * per-session jars or files, so isolation is off and all sessions
-  * share one loader and one set of compiled classes.
+  * its own executor class loader, so a clone of the session (Bench's
+  * streaming study pins its state width on one) would miss the cache
+  * and recompile on every run. graft adds no per-session jars or files,
+  * so isolation is off and all sessions share one loader and one set
+  * of compiled classes.
   */
 object GraftSession {
   /** Generated classes kept compiled across queries: the corpus's

@@ -301,7 +301,7 @@ object Dedup {
     // round-8 "size against the generated corpus first" rule; measured:
     // structural gate admits 277/500 at sf0.01. A real English corpus
     // would gate on `passes_gopher`.
-    val gated = checkpointFresh(
+    val gated = Stage.checkpointFresh(
       docs.select(col("doc_id"), col("text"))
         .join(TextAnalysis.gopherRules(docs)
           .filter(col("r_word_count") && col("r_mean_len")
@@ -316,12 +316,6 @@ object Dedup {
           size(split(col("text"), " ")).cast("long").as("n_tokens")),
       budget, shards)
   }
-
-  /** Eager localCheckpoint + stats reset — see [[Stage.checkpointFresh]]
-    * (the single project-wide definition of the barrier idiom).
-    */
-  private def checkpointFresh(df: DataFrame): DataFrame =
-    Stage.checkpointFresh(df)
 
   /** Min-label propagation over an explicit pair list (`doc_a`,`doc_b`) —
     * the component core of [[dedupClusters]], usable with any candidate
@@ -546,7 +540,7 @@ object Dedup {
     // the corpus scanned and re-shingled three times — stage it once
     // (at 100 TB this is a bucketed staging write; locally an eager
     // checkpoint), so the closing plan touches the corpus zero times
-    val sh = checkpointFresh(setSimShingles(docs))
+    val sh = Stage.checkpointFresh(setSimShingles(docs))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val df = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
     // the prefix definition exists exactly once (setSimPrefixes) — a
@@ -672,7 +666,7 @@ object Dedup {
     // separate-slice form paid two scans, two distinct exchanges and
     // two checkpoint jobs for the identical shingle rows; production
     // keeps the split inputs — the INDEXED form never sees the base.
-    val shAll = checkpointFresh(setSimShingles(
+    val shAll = Stage.checkpointFresh(setSimShingles(
       base.select(col("doc_id"), col("text"), lit(false).as("is_delta"))
         .unionByName(delta.select(col("doc_id"), col("text"),
           lit(true).as("is_delta"))),
@@ -697,7 +691,7 @@ object Dedup {
                                     tNum: Int, tDen: Int): DataFrame = {
     // the delta pass: rank ONLY the delta under the frozen order
     // two consumers (the cross join and the delta-internal self-join)
-    val prefDelta = checkpointFresh(setSimPrefixes(shDelta, dfBase, tNum, tDen))
+    val prefDelta = Stage.checkpointFresh(setSimPrefixes(shDelta, dfBase, tNum, tDen))
     val crossCand = prefBase.as("a").join(prefDelta.as("b"),
         col("a.s") === col("b.s"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
@@ -738,7 +732,7 @@ object Dedup {
         spark.conf.get("spark.sql.warehouse.dir"), s"$name$suffix")
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
-    val sh = checkpointFresh(setSimShingles(base))
+    val sh = Stage.checkpointFresh(setSimShingles(base))
     val dfTab = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
     Tables.writeBucketed(
       setSimPrefixes(sh, dfTab, tNum, tDen), s"${name}_pref", "s", buckets)
@@ -772,7 +766,7 @@ object Dedup {
     // derives from the BASE slice only
     def tag(docs: DataFrame, g: Int): DataFrame =
       docs.select(col("doc_id"), col("text"), lit(g).as("gen"))
-    val shAll = checkpointFresh(setSimShingles(
+    val shAll = Stage.checkpointFresh(setSimShingles(
       tag(base, 0).unionByName(tag(delta1, 1)).unionByName(tag(delta2, 2)),
       carry = Seq("gen")))
     def slice(g: Int): DataFrame =
@@ -820,7 +814,7 @@ object Dedup {
     val buckets = meta.bucketSpec.map(_.numBuckets).getOrElse(
       throw new IllegalStateException(s"${name}_pref is not bucketed"))
     val dfBase = spark.table(s"${name}_df")
-    val shD = checkpointFresh(setSimShingles(delta))
+    val shD = Stage.checkpointFresh(setSimShingles(delta))
     def notYetIn(rows: DataFrame, table: String): DataFrame =
       rows.join(spark.table(table).select(col("doc_id")).distinct(),
         Seq("doc_id"), "left_anti")
@@ -844,7 +838,7 @@ object Dedup {
                                    tNum: Int = 7, tDen: Int = 10): DataFrame =
     setSimIncrementalCore(spark.table(s"${name}_sh"),
       spark.table(s"${name}_df"), spark.table(s"${name}_pref"),
-      checkpointFresh(setSimShingles(delta)), tNum, tDen)
+      Stage.checkpointFresh(setSimShingles(delta)), tNum, tDen)
 
   /** Materialize one loop round AND tally its label changes in the SAME
     * Spark job (the r7 verdict's item 3): the loop's wall time on small
@@ -859,7 +853,7 @@ object Dedup {
     * round's tasks add zero no matter how often they rerun; an
     * over-count merely costs one extra (cheap, already-converged)
     * round. The createDataFrame re-wrap keeps the stats-reset contract
-    * of [[checkpointFresh]]: the LogicalRDD carries default stats, so
+    * of [[Stage.checkpointFresh]]: the LogicalRDD carries default stats, so
     * round-over-round estimates cannot compound.
     */
   private def checkpointCountingChanges(stepped: DataFrame): (DataFrame, Long) = {
@@ -882,45 +876,19 @@ object Dedup {
     * front — both union branches and every iteration read the
     * materialized copy.
     *
-    * Loop shuffle partitioning is SCALE-ADAPTIVE (r15, guide §2):
-    * per-round wall time on output-sized pair graphs is fixed
-    * scheduling/planning latency per shuffle task, and the session's
-    * partition count (sized for corpus-wide scans) is 10–30× too wide
-    * for the loop's label state. The count is derived from the
-    * MATERIALIZED edge table (one cheap job over checkpointed blocks,
-    * ~1M edge rows ≈ 16 MB per partition) and only ever SHRINKS the
-    * session setting — at cluster scale the loop keeps the configured
-    * width, locally a 7.5k-pair graph runs 1-partition rounds
-    * (measured on g8's sf0.1 graph: 9 rounds, 5.3 s → 3.1 s; the
-    * conf is restored in `finally`, and every round's state is
-    * materialized inside the scope so no lazy subplan escapes it).
+    * The loop's shuffles run at whatever width AQE picks: the session
+    * width is sized for corpus-wide scans, the label state is
+    * output-sized, and partition coalescing (on in `GraftSession.local`)
+    * merges each round's measured shuffle down to that size — a 65-doc
+    * chain's rounds run in one partition at session width 4. The loop
+    * reads and sets no conf, so concurrent queries on the same session
+    * are unaffected.
     */
-  private def componentLabels(pairs: DataFrame, maxIter: Int): DataFrame = {
-    val caller = pairs.sparkSession
-    val p = checkpointFresh(pairs)
-    val edges0 = checkpointFresh(
+  private[graft] def componentLabels(pairs: DataFrame, maxIter: Int): DataFrame = {
+    val p = Stage.checkpointFresh(pairs)
+    val edges = Stage.checkpointFresh(
       p.select(col("doc_a").as("u"), col("doc_b").as("v"))
         .union(p.select(col("doc_b").as("u"), col("doc_a").as("v"))))
-    val sessionSp = scala.util.Try(
-      caller.conf.get("spark.sql.shuffle.partitions").toLong).toOption
-    val loopSp = sessionSp.map(sp =>
-      math.max(1L, math.min(edges0.count() / 1000000L + 1L, sp)))
-    // The narrowed width lives on a CLONED session (identical conf,
-    // isolated conf map — r15 verdict #7): mutating the shared
-    // session's conf was a latent race under concurrent queries or a
-    // same-session micro-batch, which would have run at the loop's
-    // width (and overlapping scoped calls could restore each other's
-    // values out of order). The loop's frames re-root onto the clone
-    // through the materialization barrier; the converged labels
-    // re-root back. No narrowing needed (width already ≤ derived, or
-    // unset) keeps the caller's session — zero clone cost on the
-    // cluster-scale path.
-    val spark = if (loopSp.exists(l => !sessionSp.contains(l)))
-      org.apache.spark.sql.GraftShims.cloneSession(caller)
-    else caller
-    loopSp.foreach(sp =>
-      spark.conf.set("spark.sql.shuffle.partitions", sp.toString))
-    val edges = if (spark eq caller) edges0 else Stage.reRoot(edges0, spark)
     // Initial labels fold the FIRST neighbor-min round in for free:
     // comp_0 = min({id} ∪ neighbors) is exactly what one propagation
     // round over identity labels produces (the pointer jump on
@@ -929,7 +897,7 @@ object Dedup {
     // and with per-round wall time dominated by fixed job-scheduling
     // latency (the round-8 profile) that is a full round-trip saved
     // on every caller.
-    var labels = checkpointFresh(
+    var labels = Stage.checkpointFresh(
       edges.groupBy(col("u")).agg(min(col("v")).as("mv"))
         .select(col("u").as("id"), least(col("u"), col("mv")).as("comp")))
     var changed = 1L
@@ -957,9 +925,7 @@ object Dedup {
       throw new IllegalStateException(
         s"clustersFromPairs did not converge in $maxIter rounds " +
           "(component diameter too large) — raise maxIter")
-    // converged labels are materialized (every round checkpoints);
-    // re-root them back so downstream plans carry the CALLER's conf
-    if (spark eq caller) labels else Stage.reRoot(labels, caller)
+    labels
   }
 
   /** Exact cosine near-dup pairs above `threshold` — the shared

@@ -472,15 +472,16 @@ object Fraud {
     * CTEs — no convergence test, so the two engines cannot disagree on
     * when to stop.
     *
-    * Scale: the iteration count is FIXED, so the whole computation is
-    * one lazy plan — `iters` shuffle stages on the OUTPUT-sized pair
-    * graph with ZERO driver round-trips (contrast the component loop,
-    * which must check convergence per round; power iteration needs no
-    * such check). Every node has degree ≥ 1 by construction (nodes
-    * exist only as edge endpoints), so there is no dangling-mass
-    * correction term. The edge list and degree table are checkpointed
-    * once; per-iteration cost is two small-side joins (AQE broadcasts
-    * the rank table while it is small) plus one aggregate.
+    * Scale: the iteration count is FIXED, so the whole iteration is
+    * one plan, materialized once — `iters` shuffle stages on the
+    * OUTPUT-sized pair graph with ZERO per-round driver round-trips
+    * (contrast the component loop, which must check convergence per
+    * round; power iteration needs no such check). Every node has
+    * degree ≥ 1 by construction (nodes exist only as edge endpoints),
+    * so there is no dangling-mass correction term. The edge list and
+    * degree table are checkpointed once; per-iteration cost is two
+    * small-side joins (AQE broadcasts the rank table while it is small)
+    * plus one aggregate.
     */
   def collusionPageRank(events: DataFrame, minShared: Int = 6,
                         maxBucket: Int = 64, iters: Int = 8): DataFrame =
@@ -491,55 +492,33 @@ object Fraud {
   /** Power iteration over an undirected pair list — see
     * [[collusionPageRank]] for the arithmetic and portability contract.
     *
-    * EAGER: the power iteration executes inside this call (the scoped
-    * narrow-width materialization below) — the returned frame is a
-    * projection over the converged fixed point, not a lazy 3·iters
-    * plan. Callers that only inspect the plan shape still pay the full
-    * run; the empty-graph early return is the one lazy path.
+    * EAGER: the power iteration executes inside this call (the
+    * checkpoint of the converged fixed point below) — the returned
+    * frame is a projection over that table, not a lazy 3·iters plan.
+    * Callers that only inspect the plan shape still pay the full run;
+    * the empty-graph early return is the one lazy path.
     */
   def pageRankFromPairs(pairs: DataFrame, iters: Int = 8): DataFrame = {
     val scale = 1000000000000L
-    val caller = pairs.sparkSession
-    val edges0 = pairs.localCheckpoint(true)
-    val deg0 = edges0
+    val edges = pairs.localCheckpoint(true)
+    val deg = edges
       .select(col("user_a").as("u"), col("user_b").as("v"))
-      .union(edges0.select(col("user_b").as("u"), col("user_a").as("v")))
+      .union(edges.select(col("user_b").as("u"), col("user_a").as("v")))
       .groupBy(col("u")).agg(count(lit(1)).as("degree"))
       .localCheckpoint(true)
     // node count: one scalar from the (output-sized, checkpointed)
     // degree table — a bounded model value, like the centroid tables
-    val n = deg0.count()
+    val n = deg.count()
     if (n == 0) {
-      return deg0.select(col("u").as("user_id"), lit(0L).as("pr_fp"),
+      return deg.select(col("u").as("user_id"), lit(0L).as("pr_fp"),
         lit(0.0).as("pagerank")).limit(0)
     }
     val base = scale / n
-    // The `iters` power-iteration stages run over NODE-sized tables
-    // (ranks/deg), so their shuffles take the componentLabels r15
-    // treatment (guide §2): partition count derived from the measured
-    // graph size, shrink-only vs the session setting. Scoping the conf
-    // requires the iterated plan to EXECUTE inside the scope, so the
-    // converged fixed-point table is materialized here (one
-    // localCheckpoint of a node-sized integer table — the former
-    // zero-action form executed the same 3·iters stages lazily at the
-    // sink, each exchange at corpus width). The arithmetic is exact
-    // fixed-point longs; the materialization changes no value. The
-    // narrowed width lives on a CLONED session (identical conf,
-    // isolated map — r15 verdict #7: the session-global mutation was a
-    // latent race under concurrent same-session queries).
-    val sessionSp = scala.util.Try(
-      caller.conf.get("spark.sql.shuffle.partitions").toLong).toOption
-    val loopSp = sessionSp.map(sp =>
-      math.max(1L, math.min(n / 500000L + 1L, sp)))
-    val spark = if (loopSp.exists(l => !sessionSp.contains(l)))
-      org.apache.spark.sql.GraftShims.cloneSession(caller)
-    else caller
-    loopSp.foreach(sp =>
-      spark.conf.set("spark.sql.shuffle.partitions", sp.toString))
-    val edges = if (spark eq caller) edges0 else Stage.reRoot(edges0, spark)
+    // The `iters` stages run over NODE-sized tables (ranks/deg); AQE's
+    // partition coalescing sizes their shuffles from what they measure,
+    // so no width is set here.
     val und = edges.select(col("user_a").as("u"), col("user_b").as("v"))
       .union(edges.select(col("user_b").as("u"), col("user_a").as("v")))
-    val deg = if (spark eq caller) deg0 else Stage.reRoot(deg0, spark)
     var ranks = deg.select(col("u"), lit(base).as("fp"))
     for (_ <- 1 to iters) {
       ranks = und.join(ranks, Seq("u")).join(deg, Seq("u"))
@@ -548,9 +527,13 @@ object Fraud {
         .select(col("u"),
           expr(s"(${15L * base} + 85 * contrib) div 100").as("fp"))
     }
+    // Materialize the fixed point here: the barrier cuts the 3·iters-deep
+    // plan to a `Scan ExistingRDD` leaf and resets its stats, so no
+    // downstream plan re-plans (or re-estimates) the whole iteration.
+    // The arithmetic is exact fixed-point longs; the materialization
+    // changes no value.
     val converged = Stage.checkpointFresh(ranks)
-    val home = if (spark eq caller) converged else Stage.reRoot(converged, caller)
-    home.select(col("u").as("user_id"), col("fp").as("pr_fp"),
+    converged.select(col("u").as("user_id"), col("fp").as("pr_fp"),
       (col("fp").cast("double") / lit(scale).cast("double")).as("pagerank"))
   }
 

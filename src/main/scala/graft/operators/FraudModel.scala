@@ -32,8 +32,12 @@ object FraudModel {
       .withColumn("label",
         when(col("fraud_score") >= 1.0, 1.0).otherwise(0.0))
 
+  /** The assembler names its intermediate columns after its uid, and
+    * those names reach the generated code: a fresh random uid per call
+    * compiled new classes on every run, so the uid is fixed.
+    */
   def assemble(df: DataFrame): DataFrame =
-    new VectorAssembler()
+    new VectorAssembler("graft_fraud_features")
       .setInputCols(featureCols.toArray)
       .setOutputCol("features_vec")
       .transform(df)

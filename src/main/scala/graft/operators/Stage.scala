@@ -34,16 +34,4 @@ private[graft] object Stage {
     val ck = df.localCheckpoint(true)
     df.sparkSession.createDataFrame(ck.rdd, ck.schema)
   }
-
-  /** Lazily re-root an ALREADY-materialized frame onto `target` (no new
-    * checkpoint job — the frame's own RDD lineage executes at consumer
-    * time over materialized blocks). The materialized RDD is
-    * context-level, so wrapping it in a DataFrame of a DIFFERENT session
-    * of the same context moves the downstream plan (and its conf,
-    * notably `spark.sql.shuffle.partitions`) to that session — the
-    * cross-session hop the cloned-session loops use.
-    */
-  def reRoot(df: DataFrame,
-             target: org.apache.spark.sql.SparkSession): DataFrame =
-    target.createDataFrame(df.rdd, df.schema)
 }

@@ -23,12 +23,12 @@ object GraftShims {
     * but an isolated conf map — a conf set on the clone is invisible to
     * the original. `newSession()` is NOT a substitute: it resets the
     * runtime conf to build-time defaults, dropping every conf the
-    * caller set since. Used by the scale-adaptive iterative loops
-    * (Dedup.componentLabels, Fraud.pageRankFromPairs) to narrow
-    * `spark.sql.shuffle.partitions` for their node-sized rounds, and by
-    * Bench's streaming study to pin state widths, without mutating the
-    * shared session (r15 verdict #7 — the session-global
-    * scope was a latent race under concurrent queries).
+    * caller set since. One caller: Bench's streaming study, which pins
+    * a stateful operator's state width — Spark fixes that width from
+    * `spark.sql.shuffle.partitions` at the stream's first checkpoint —
+    * without mutating the shared session. The clone is not released;
+    * its listener-bus entries are dropped lazily through weak
+    * references once it is unreachable.
     */
   def cloneSession(spark: SparkSession): SparkSession =
     spark.asInstanceOf[classic.SparkSession].cloneSession()

@@ -476,38 +476,22 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       "report sizes must match d8's multi-doc clusters exactly")
   }
 
-  test("component loop narrows shuffle width on a CLONE: the caller session never sees it (r16)") {
-    // r15 verdict #7: the loop's scale-adaptive shuffle.partitions used
-    // to be scoped by mutating the SHARED session conf — a concurrent
-    // query on the same session could run at the narrowed width. The
-    // loop now clones the session; a probe thread hammering the
-    // CALLER's conf for the whole call must only ever read the session
-    // width (deterministic under the new design: nothing narrows the
-    // caller's conf at any instant).
+  test("component loop width is AQE's: one partition at width 4, caller conf untouched") {
+    // The loop sets no conf: AQE partition coalescing sizes each round
+    // from the shuffle it measures, so the chain's labels land in one
+    // partition at the suite's session width of 4, and the caller's
+    // width reads the same afterwards.
     import spark.implicits._
     val width = spark.conf.get("spark.sql.shuffle.partitions")
     val pairs = (1L to 64L).map(i => (s"d$i", s"d${i + 1}"))
       .toDF("doc_a", "doc_b")
-    @volatile var stop = false
-    // distinct values only: the probe spins for the whole multi-round
-    // job, and the assertion reads nothing but the distinct set
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val probe = new Thread(() => {
-      while (!stop) {
-        seen.add(spark.conf.get("spark.sql.shuffle.partitions"))
-        Thread.`yield`()
-      }
-    })
-    probe.start()
-    val labels =
-      try Dedup.clustersFromPairsOnly(pairs).collect()
-      finally { stop = true; probe.join() }
+    val labels = Dedup.componentLabels(pairs, maxIter = 25)
+    val rows = labels.collect()
     // one chain of 65 docs -> one component
-    assert(labels.map(_.getAs[String]("cluster_id")).distinct.length === 1)
+    assert(rows.length === 65)
+    assert(rows.map(_.getAs[String]("comp")).distinct.length === 1)
+    assert(width === "4", "the partition bound below is read at width 4")
+    assert(labels.rdd.getNumPartitions === 1)
     assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
-    import scala.jdk.CollectionConverters._
-    val observed = seen.asScala.toSet
-    assert(observed === Set(width),
-      s"a concurrent reader saw a narrowed width: $observed")
   }
 }

@@ -932,13 +932,12 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // by default; one pass of these three queries needs more than that,
     // so at the default every pass evicts its own classes and compiles
     // them all again (190 of 214 at sf0.001). GraftSession.local
-    // sizes the cache to the corpus's working set, and turns artifact
-    // isolation off so c30's and m1's cloned-session loops reuse the
-    // session's classes (with the cache alone they recompiled ~42 per
-    // pass). The cache starts
-    // empty so pass 1 counts the whole working set, whatever ran earlier
-    // in this JVM. The counter ticks once per Janino compile; cache hits
-    // do not count. The session comes first: touching CodeGenerator
+    // sizes the cache to the corpus's working set (artifact isolation,
+    // which it also turns off, matters only for cloned sessions, and
+    // these queries clone none). The cache starts empty so pass 1
+    // counts the whole working set, whatever ran earlier in this JVM.
+    // The counter ticks once per Janino compile; cache hits do not
+    // count. The session comes first: touching CodeGenerator
     // initializes it, and it sizes its cache from the conf active then.
     val session = spark
     val codegen = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator

@@ -9,25 +9,44 @@ import org.scalatest.funsuite.AnyFunSuite
 /** One session factory, checked by machine: `GraftSession.local` fixes
   * the engine's conf (AQE, UTC, width, the `graft.functions`
   * extensions), so a main that spells its own builder runs a different
-  * engine than the one the specs, Verify and the benchmarks run.
+  * engine than the one the specs, Verify and the benchmarks run. And
+  * no operator or stream touches that conf: a setting made inside one
+  * would change every concurrent query on the shared session.
   *
-  * No Spark session: a source walk, cheap enough for every `sbt test`.
+  * No Spark session: source walks, cheap enough for every `sbt test`.
   */
 class SessionFactorySpec extends AnyFunSuite {
 
-  test("SparkSession.builder appears in no main source but GraftSession.scala") {
-    val root = Paths.get("src/main/scala")
-    val factory = root.resolve("graft/GraftSession.scala")
-    val sources = scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
+  private val root = Paths.get("src/main/scala")
+
+  private def scalaSources(dir: Path): List[Path] =
+    scala.util.Using.resource(Files.walk(dir))(_.iterator().asScala
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toList)
+
+  private def read(p: Path): String =
+    new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)
+
+  test("SparkSession.builder appears in no main source but GraftSession.scala") {
+    val factory = root.resolve("graft/GraftSession.scala")
+    val sources = scalaSources(root)
     assert(sources.contains(factory), s"$factory missing — the walk is looking elsewhere")
     // whitespace-tolerant: a builder chain split across lines counts too
     val builder = """SparkSession\s*\.\s*builder\b""".r
-    def builds(p: Path): Boolean = builder.findFirstIn(
-      new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8)).isDefined
+    def builds(p: Path): Boolean = builder.findFirstIn(read(p)).isDefined
     assert(builds(factory))
     val strays = sources.filter(p => p != factory && builds(p))
     assert(strays.isEmpty,
       s"hand-spelled session builders (use GraftSession.local): ${strays.mkString(", ")}")
+  }
+
+  test("no operator or stream sets session conf or clones a session") {
+    val dirs = Seq("graft/operators", "graft/streaming").map(root.resolve)
+    val sources = dirs.flatMap(scalaSources)
+    dirs.foreach(d => assert(sources.exists(_.startsWith(d)), s"no sources under $d"))
+    // whitespace-tolerant, like the builder walk
+    val mutation = """conf\s*\.\s*set\s*\(|cloneSession""".r
+    val strays = sources.filter(p => mutation.findFirstIn(read(p)).isDefined)
+    assert(strays.isEmpty,
+      s"session conf set (or a session cloned) inside an operator: ${strays.mkString(", ")}")
   }
 }
