@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * ~2000 characters of stdout, so one giant JSON line loses the whole
   * round's perf signal):
   *  1. a `{"metric":"studies",...}` line with the study entries
-  *     (j1/j2/j3/h1/h10/h11/e4/e6/e7/e8-persisted) and the cross-sf
+  *     (j1/j2/j3/h10/h11/e4/e6/e7/e8-persisted) and the cross-sf
   *     scaling object — diagnostic, may exceed the tail window;
   *  2. the COMPLETE result (headline + studies + scaling) written to
   *     `BENCH_FULL.json` in the working directory, where a size limit
@@ -401,10 +401,10 @@ object Bench {
     }
 
   /** Suspect decision for STUDY seconds (round-12 verdict item 5:
-    * `h1_trend_vol_x4` read 3.2× its prior — a host-contended
-    * streaming read — and nothing flagged it, silently swinging the
-    * derived marginal-rows/s 3×). Studies are multi-minute protocols,
-    * not single queries, so there is no cheap re-run: a >2× mover is
+    * a streaming volume study's 4× run read 3.2× its prior — a
+    * host-contended streaming read — and nothing flagged it, silently
+    * swinging the derived marginal-rows/s 3×). Studies are multi-minute
+    * protocols, not single queries, so there is no cheap re-run: a >2× mover is
     * recorded once and FLAGGED, the same record-once arm stallGuard
     * takes past its ceiling. Same jitter floor as stallGuard (sub-0.5 s
     * readings never flag).
@@ -626,7 +626,6 @@ object Bench {
         name -> guarded
       }
     }
-    val streaming = streamingThroughput(spark, sfDir)
     val bucketed = bucketedJoinStudy(spark, sfDir)
     val curation = curationGateStudy(spark, sfDir).map(e => Metric(e._1, e._2))
     val annIndex = annIndexStudy(spark, sfDir).map(e => Metric(e._1, e._2))
@@ -641,9 +640,8 @@ object Bench {
     val ssidx = setSimIndexStudy(spark, sfDir)
     val pairs = pairDensityStudy(spark, sfDir)
     val all: Seq[Metric] = results.map(e => Metric(e._1, e._2)) ++
-      streaming ++ bucketed ++ curation ++ annIndex ++
-      compaction ++ codec ++ layout ++ prune ++ colPrune ++ zorder ++
-      maintenance ++ wvol ++ ssidx ++ pairs
+      bucketed ++ curation ++ annIndex ++ compaction ++ codec ++ layout ++
+      prune ++ colPrune ++ zorder ++ maintenance ++ wvol ++ ssidx ++ pairs
     // study seconds ride the same suspect discipline as query seconds
     // (round-12 verdict item 5) — flag-only, studies have no cheap
     // re-run; the guarded headline/extended names were already handled
@@ -1373,13 +1371,6 @@ object Bench {
     }
   }
 
-  /** H10 throughput: the streaming corpus-curation gate (exact-dup drop
-    * + quality floor + Bloom decontamination) over the documents corpus
-    * rendered to JSON files — the LLM-pipeline streaming headline,
-    * measured the same way as the h1 variants (AvailableNow through a
-    * noop foreachBatch). The benchmark side is the d11 stand-in
-    * (doc_id % 10 = 3), collected once into the broadcast Bloom sketch.
-    */
   /** Setup + timed runner for the h10 curation gate over the documents
     * table at `dir`: renders the corpus to JSON files and builds the
     * benchmark Bloom (both untimed setup), returning a label→timed-run
@@ -1429,6 +1420,13 @@ object Bench {
     }
   }
 
+  /** H10 throughput: the streaming corpus-curation gate (exact-dup drop
+    * + quality floor + Bloom decontamination) over the documents corpus
+    * rendered to JSON files — the LLM-pipeline streaming headline, run
+    * AvailableNow at 4 files per trigger through a noop foreachBatch.
+    * The benchmark side is the d11 stand-in (doc_id % 10 = 3),
+    * collected once into the broadcast Bloom sketch.
+    */
   private def curationGateStudy(spark: SparkSession,
                                 sfDir: String): Seq[(String, Double)] = {
     import org.apache.spark.sql.functions._
@@ -1774,41 +1772,6 @@ object Bench {
     }
   }
 
-  /** Streaming throughput scaling study: the transaction fact rendered
-    * to CSV (the reference's wire format, 16 input files), streamed
-    * through watermark + stream-static enrichment + rule scoring into a
-    * noop sink.
-    *
-    * Two axes, reported as bench entries over the same input:
-    *  - micro-batch size (`maxFilesPerTrigger` 1 / 4 / 16 →
-    *    `h1_stream_smallbatch` / `h1_stream_pipeline` /
-    *    `h1_stream_bigbatch`): fewer, larger batches amortize per-batch
-    *    planning/commit overhead — the trade the reference consumer
-    *    makes with its BATCH_SIZE knob;
-    *  - shuffle/state partition count for the STATEFUL path
-    *    (`h1_trend_sp32` / `h1_trend_sp8`): the windowed trend
-    *    aggregation adds a state-store shuffle whose partition count is
-    *    `spark.sql.shuffle.partitions` at first batch; at small batch
-    *    volumes per-partition state overhead dominates, so fewer state
-    *    partitions can win — the knee to find before sizing a cluster.
-    */
-  private val streamingVariants: Seq[String] = Seq(
-    "h1_stream_smallbatch", "h1_stream_pipeline", "h1_stream_bigbatch",
-    "h1_trend_sp32", "h1_trend_sp8")
-
-  /** H12/H17 maintenance-stream steady-state study (the r5 verdict's
-    * ask): the sketch/drift cell tables are correct under replay
-    * (spec'd), but what do they COST to keep warm? The events fact is
-    * split into 16 files and streamed through both maintainers with
-    * 4-file micro-batches (AvailableNow); reported per maintainer:
-    *  - `*_rows_per_s`: input rows / wall seconds for the whole run —
-    *    the steady-state admission rate one executor-set sustains;
-    *  - `*_cells_per_batch`: cell rows landed per micro-batch — the
-    *    write amplification of keeping the state table current (the
-    *    CMS writes ≤ depth×2^17 cells/batch however large the batch,
-    *    the drift grid ≤ 256 — both shrink RELATIVE to batch size as
-    *    batches grow, which is the scale argument made measurable).
-    */
   /** D23b persisted-index pricing (the round-9 verdict's item 3): the
     * headline `d23b_setsim_incremental` recomputes the base index
     * lineage-fresh every run — the harness form. Production builds the
@@ -1966,7 +1929,7 @@ object Bench {
   }
 
   /** Sustained-volume study for the round-8 windowed-sketch/sample
-    * sinks (h33/h34/h35), under the h1 x1/x4 protocol (x1: 16 files at
+    * sinks (h33/h34/h35), streamed at two volumes (x1: 16 files at
     * 4/trigger; x4: 4× the rows in 64 files at 16/trigger — four
     * micro-batches either way, so fixed stream-start cost amortizes
     * identically and the axis is per-batch volume). The claim being
@@ -2080,189 +2043,6 @@ object Bench {
       if (tmp != null)
         try org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
         catch { case scala.util.control.NonFatal(_) => () }
-    }
-  }
-
-  private def streamingThroughput(spark: SparkSession,
-                                  sfDir: String): Seq[Metric] = {
-    import org.apache.spark.sql.functions._
-    import graft.operators.Fraud
-    import graft.sources.Tables
-    // Setup (the CSV render) is the only section allowed to fail the
-    // whole study; each measured variant catches its own failure so one
-    // bad run can't discard completed measurements.
-    // Track what setup persisted so the catch can unpersist it — if the
-    // CSV render below throws AFTER users/products are cached, returning
-    // None without the unpersist would leak both tables for the rest of
-    // the session (r15 advice #1)
-    val setupPersisted = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.spark.sql.DataFrame]
-    val setup: Option[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] =
-      try {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_bench_stream").toString
-        // The dimension sides are SETUP, like the CSV render below: a
-        // production stream materializes its static lookup tables once,
-        // not once per trigger — unpersisted, every micro-batch of every
-        // variant re-scanned customer/nation/part and re-built both
-        // broadcasts, so the small-batch variants measured dimension
-        // re-derivation, not trigger overhead (r15, guide §1/§2.4;
-        // measurement-methodology change recorded in OPTIMIZATION_r15.md
-        // — prior-round numbers stay in BENCH_r*.json history). The
-        // persist lives inside this one study and is dropped in the
-        // finally below; the data still derives from the parquet inputs
-        // on every bench invocation.
-        val users = Tables.table(spark, sfDir, "customer")
-          .join(broadcast(Tables.table(spark, sfDir, "nation")),
-            col("c_nationkey") === col("n_nationkey"), "left")
-          .select(col("c_custkey").cast("int").as("user_id"),
-            col("c_name").as("name"), lit("u@x").as("email"),
-            col("n_name").as("country"),
-            lit("2020-01-01 00:00:00").cast("timestamp").as("signup_date"))
-          .persist()
-        setupPersisted += users
-        val products = Tables.table(spark, sfDir, "part")
-          .select(col("p_partkey").cast("int").as("product_id"),
-            col("p_name").as("name"), col("p_type").as("category"),
-            col("p_retailprice").as("base_price"), lit("acme").as("supplier"),
-            lit("FRANCE").as("country"), lit(true).as("in_stock"),
-            (col("p_retailprice") % 30).as("discount"))
-          .persist()
-        setupPersisted += products
-        users.count(); products.count() // materialize in setup, untimed
-        Fraud.transactions(spark, sfDir)
-          .select(col("transaction_id"), col("user_id").cast("int"),
-            col("product_id").cast("int"), lit("s1").as("store_id"),
-            col("amount"), col("payment_method"), lit("FRANCE").as("country"),
-            col("ts").as("timestamp"))
-          .repartition(16)
-          .write.option("header", "true").csv(s"$tmp/in")
-        Some((tmp, users, products))
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[bench] streaming setup failed: ${e.getMessage}")
-          setupPersisted.foreach(df =>
-            try df.unpersist()
-            catch { case scala.util.control.NonFatal(_) => () })
-          None
-      }
-    setup match {
-      case None => streamingVariants.map(Metric(_, -1.0))
-      case Some((tmp, users, products)) =>
-        // run returns (label, seconds, stateRows): stateRows is the last
-        // micro-batch's total state-store rows for the stateful (trend)
-        // path — the state-growth axis of the volume study below
-        // a pinned state width runs the stream on a session CLONE: the
-        // state width is read from conf at the first checkpoint, so it
-        // must be set, but the shared session's conf is never mutated,
-        // and the static sides stay its cached frames
-        def run(label: String, maxFilesPerTrigger: Int,
-                trend: Boolean = false,
-                shufflePartitions: Option[Int] = None,
-                inDir: String = s"$tmp/in"): (String, Double, Double) = {
-          val session = shufflePartitions.fold(spark) { n =>
-            val clone = org.apache.spark.sql.GraftShims.cloneSession(spark)
-            clone.conf.set("spark.sql.shuffle.partitions", n.toString)
-            clone
-          }
-          var q: org.apache.spark.sql.streaming.StreamingQuery = null
-          val (_, secs) = time(label) {
-            val scored = graft.streaming.FraudStream
-              .scoredStream(Tables.readCsvStream(session, inDir,
-                Tables.transactionSchema, maxFilesPerTrigger), users, products)
-            val out =
-              if (trend) graft.streaming.FraudStream.userSpendTrend(scored)
-              else scored
-            val writer = out.writeStream
-              .option("checkpointLocation", s"$tmp/ckpt_$label")
-              .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-                b.write.format("noop").mode("overwrite").save()
-              }
-            q = (if (trend) writer.outputMode("update") else writer)
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
-          }
-          val stateRows = if (secs < 0) -1.0 else Option(q.lastProgress)
-            .map(_.stateOperators.map(_.numRowsTotal.toDouble).sum)
-            .getOrElse(-1.0)
-          (label, secs, stateRows)
-        }
-        // untimed warm-up runs (one per plan shape): the streaming plans
-        // pay the same one-time codegen/JIT cost as the batch queries —
-        // without this the first measured variant absorbs it and the
-        // comparison is an ordering artifact
-        try {
-          run("warmup", 16)
-          run("warmup_trend", 16, trend = true)
-          val variants = Seq(
-            run("h1_stream_smallbatch", 1),
-            run("h1_stream_pipeline", 4),
-            run("h1_stream_bigbatch", 16),
-            // both state-partition counts pinned explicitly — the ambient
-            // setting follows SPARK_GRAFT_CPUS, so "sp32" must not rely on it
-            run("h1_trend_sp32", 16, trend = true, shufflePartitions = Some(32)),
-            run("h1_trend_sp8", 16, trend = true, shufflePartitions = Some(8)))
-            .map(r => Metric(r._1, r._2))
-          variants ++ volumeScaling(spark, tmp, run)
-        } finally {
-          users.unpersist(false); products.unpersist(false)
-        }
-    }
-  }
-
-  /** h1 volume study (the round-6 verdict's last unpriced streaming
-    * axis): the SAME stateful trend pipeline driven at 1x and 4x input
-    * volume (the 16 CSV files copied 4x — identical rows, four times
-    * over), reported as rows/s plus the final state-store row count at
-    * each volume. Both runs are pinned to the SAME micro-batch COUNT
-    * (x1: 16 files at 4/trigger, x4: 64 files at 16/trigger — four
-    * triggers each) so per-trigger planning/commit overhead cancels
-    * and the rows/s ratio isolates the MARGINAL per-row cost at 4x the
-    * per-batch volume — the first r7 protocol (x1 as one mega-batch)
-    * let fixed stream-start cost land entirely on the x1 reading and
-    * swung the ratio ±80% between runs. The state claim is unchanged:
-    * replicated rows land in existing (window, user) state entries, so
-    * state_rows_x4 should equal state_rows_x1. rows/s and state rows
-    * are non-second metrics; the x4 run's wall time rides along as a
-    * seconds entry.
-    */
-  private def volumeScaling(spark: SparkSession, tmp: String,
-      run: (String, Int, Boolean, Option[Int], String) => (String, Double, Double))
-      : Seq[Metric] = {
-    import graft.sources.Tables
-    try {
-      val inPath = new org.apache.hadoop.fs.Path(s"$tmp/in")
-      val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in4 = new org.apache.hadoop.fs.Path(s"$tmp/in4")
-      fs.mkdirs(in4)
-      val parts = fs.listStatus(inPath).filter(_.getPath.getName.startsWith("part-"))
-      for (f <- parts; i <- 0 until 4)
-        org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-          new org.apache.hadoop.fs.Path(in4, s"r${i}_${f.getPath.getName}"),
-          false, spark.sparkContext.hadoopConfiguration)
-      // row counts per volume (untimed; header rows excluded by the read)
-      val n1 = spark.read.option("header", "true")
-        .schema(Tables.transactionSchema).csv(s"$tmp/in").count().toDouble
-      val n4 = n1 * 4
-      // equal trigger counts: 16 files / 4 per trigger vs 64 / 16
-      val r1 = run("h1_trend_vol_x1", 4, true, Some(32), s"$tmp/in")
-      val r4 = run("h1_trend_vol_x4", 16, true, Some(32), s"$tmp/in4")
-      Seq(
-        // the 4x run's wall time rides along as a real seconds entry
-        Metric("h1_trend_vol_x4", r4._2),
-        Metric("h1_trend_rows_per_s_x1",
-          if (r1._2 > 0) n1 / r1._2 else -1.0, seconds = false),
-        Metric("h1_trend_rows_per_s_x4",
-          if (r4._2 > 0) n4 / r4._2 else -1.0, seconds = false),
-        Metric("h1_trend_state_rows_x1", r1._3, seconds = false),
-        Metric("h1_trend_state_rows_x4", r4._3, seconds = false))
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] volume study failed: ${e.getMessage}")
-        Metric("h1_trend_vol_x4", -1.0) +:
-          Seq("h1_trend_rows_per_s_x1", "h1_trend_rows_per_s_x4",
-            "h1_trend_state_rows_x1", "h1_trend_state_rows_x4")
-            .map(Metric(_, -1.0, seconds = false))
     }
   }
 }

@@ -34,30 +34,39 @@ import graft.sources.Tables
 object Probe {
   private val usage =
     "usage: Probe <time|explain|plansize|scale> <sfDir> <names|--all> [reps]"
+  private val modes = Set("time", "explain", "plansize", "scale")
 
-  def main(args: Array[String]): Unit = {
+  private[tools] type Query = (String, (SparkSession, String) => DataFrame)
+
+  /** (mode, sfDir, selected queries, reps), checked before any session
+    * is built: a bad argument fails at once instead of after Spark's
+    * start-up (or, for `reps` 0, after `time`'s whole warm-up pass). */
+  private[tools] def parse(args: Array[String]): (String, String, Seq[Query], Int) = {
     require(args.length >= 3, usage)
     val Array(mode, sfDir, selection) = args.take(3)
+    require(modes(mode), s"unknown mode '$mode'; $usage")
+    val reps = if (args.length > 3) args(3).toInt else 3
+    require(reps >= 1, s"reps must be at least 1, got $reps; $usage")
     val queries = SparkEntry.queries
     val names =
       if (selection == "--all") queries.keys.toSeq.sorted
       else selection.split(",").toSeq
     val unknown = names.filterNot(queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val selected = names.map(n => n -> queries(n))
+    (mode, sfDir, names.map(n => n -> queries(n)), reps)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (mode, sfDir, selected, reps) = parse(args)
     val spark = sys.env.get("SPARK_GRAFT_CPUS")
       .fold(GraftSession.local())(c => GraftSession.local(c.toInt))
     try mode match {
-      case "time" =>
-        time(spark, sfDir, selected, if (args.length > 3) args(3).toInt else 3)
+      case "time" => time(spark, sfDir, selected, reps)
       case "explain" => explain(spark, sfDir, selected)
       case "plansize" => planSize(spark, sfDir, selected)
       case "scale" => scale(spark, sfDir, selected)
-      case other => throw new IllegalArgumentException(s"unknown mode '$other'; $usage")
     } finally spark.stop()
   }
-
-  private type Query = (String, (SparkSession, String) => DataFrame)
 
   private def time(spark: SparkSession, sfDir: String, selected: Seq[Query],
                    reps: Int): Unit = {

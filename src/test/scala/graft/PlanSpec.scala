@@ -932,9 +932,9 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     // by default; one pass of these three queries needs more than that,
     // so at the default every pass evicts its own classes and compiles
     // them all again (190 of 214 at sf0.001). GraftSession.local
-    // sizes the cache to the corpus's working set (artifact isolation,
-    // which it also turns off, matters only for cloned sessions, and
-    // these queries clone none). The cache starts empty so pass 1
+    // sizes the cache to the corpus's working set (and turns artifact
+    // isolation off, so every session shares one class loader and one
+    // set of compiled classes). The cache starts empty so pass 1
     // counts the whole working set, whatever ran earlier in this JVM.
     // The counter ticks once per Janino compile; cache hits do not
     // count. The session comes first: touching CodeGenerator
@@ -957,7 +957,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(cold > 100, s"pass 1 compiled only $cold classes: the case no longer exercises eviction")
     // AQE names whole-stage classes by stage id in the order it creates
     // stages, so a run whose stages finish in another order compiles a
-    // few (2 to 6 seen); the bound stays under the cloned-loader 42
+    // few (2 to 6 seen); eviction recompiles far more (190 per pass)
     val warmBound = 20
     assert(warm <= warmBound,
       s"warm pass compiled $warm classes (cold pass: $cold): generated code is being evicted")

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * extensions), so a main that spells its own builder runs a different
   * engine than the one the specs, Verify and the benchmarks run. And
   * no operator or stream touches that conf: a setting made inside one
-  * would change every concurrent query on the shared session.
+  * would change every concurrent query on the shared session. Nothing
+  * under src/main clones the session either.
   *
   * No Spark session: source walks, cheap enough for every `sbt test`.
   */
@@ -44,9 +45,13 @@ class SessionFactorySpec extends AnyFunSuite {
     val sources = dirs.flatMap(scalaSources)
     dirs.foreach(d => assert(sources.exists(_.startsWith(d)), s"no sources under $d"))
     // whitespace-tolerant, like the builder walk
-    val mutation = """conf\s*\.\s*set\s*\(|cloneSession""".r
-    val strays = sources.filter(p => mutation.findFirstIn(read(p)).isDefined)
+    val confSet = """conf\s*\.\s*set\s*\(""".r
+    val strays = sources.filter(p => confSet.findFirstIn(read(p)).isDefined)
     assert(strays.isEmpty,
-      s"session conf set (or a session cloned) inside an operator: ${strays.mkString(", ")}")
+      s"session conf set inside an operator or stream: ${strays.mkString(", ")}")
+    // no main source clones a session at all: a clone splits the shared
+    // session's conf map, and nothing in the engine needs a second one
+    val cloners = scalaSources(root).filter(p => read(p).contains("cloneSession"))
+    assert(cloners.isEmpty, s"session cloned in: ${cloners.mkString(", ")}")
   }
 }
