@@ -1891,7 +1891,7 @@ object Bench {
       val (driftFix, driftMarg) = split(tDrift1, tDrift4, nRows)
       val driftCells = spark.read.parquet(s"$tmp/drift_cells1").count().toDouble
       // H20: vector-index delta maintenance — the embeddings corpus
-      // streamed through cell assignment into the (cell, batch_id)
+      // streamed through cell assignment into the (batch_id, cell)
       // delta layout; base index built first (centroid model source)
       val emb = Tables.table(spark, sfDir, "embeddings")
       val nVecs = emb.count().toDouble

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamReader
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Sources & sinks.
@@ -285,37 +285,6 @@ object Tables {
       .schema(schema)
       .json(path)
 
-  /** Date-partitioned parquet sink (reference: src/spark/jobs/spark.py
-    * fraud sink partitioned by payment_method/tx_year/tx_month/tx_day).
-    *
-    * Repartitions by the partition columns first so each partition
-    * directory receives one file per shuffle partition instead of one per
-    * upstream task — at 1000 executors an unrepartitioned partitionBy
-    * write produces tasks×partitions small files and melts the namenode.
-    */
-  def writeDatePartitioned(df: DataFrame, tsCol: String, path: String,
-                           extraPartitionCols: Seq[String] = Seq("payment_method")): Unit =
-    writeDateParts(df, tsCol, path, extraPartitionCols, "append", dynamicOverwrite = false)
-
-  /** Shared date-partition derivation + small-file-avoidance repartition
-    * for both sink variants — one place owns the layout.
-    */
-  private def writeDateParts(df: DataFrame, tsCol: String, path: String,
-                             leadingCols: Seq[String], mode: String,
-                             dynamicOverwrite: Boolean): Unit = {
-    val withParts = df
-      .withColumn("tx_year", year(col(tsCol)))
-      .withColumn("tx_month", month(col(tsCol)))
-      .withColumn("tx_day", dayofmonth(col(tsCol)))
-    val partCols = leadingCols ++ Seq("tx_year", "tx_month", "tx_day")
-    val writer = withParts
-      .repartition(partCols.map(col): _*)
-      .write.mode(mode)
-    (if (dynamicOverwrite) writer.option("partitionOverwriteMode", "dynamic") else writer)
-      .partitionBy(partCols: _*)
-      .parquet(path)
-  }
-
   /** Read back a date-partitioned sink; partition columns are recovered
     * from directory paths (reference: src/airflow/script scripts recover
     * year/month/day from object paths). Filters on partition columns
@@ -324,19 +293,89 @@ object Tables {
   def readPartitioned(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 
-  /** Exactly-once variant of the date-partitioned sink for foreachBatch:
-    * the micro-batch id is the leading partition column and the write is
-    * a DYNAMIC partition overwrite, so a replayed batch (crash between
-    * sink write and checkpoint commit) replaces its own partition subtree
-    * instead of appending duplicates. Trades the reference's pure
-    * payment_method-first layout for idempotence; `readPartitioned`
-    * still prunes on all partition columns.
+  /** The date parts the reference sink partitions by, in layout order. */
+  private[graft] val dateParts: Seq[String] = Seq("tx_year", "tx_month", "tx_day")
+
+  /** `df` with [[dateParts]] derived from the event time `tsCol`. */
+  private[graft] def withDateParts(df: DataFrame, tsCol: String): DataFrame =
+    df.withColumn("tx_year", year(col(tsCol)))
+      .withColumn("tx_month", month(col(tsCol)))
+      .withColumn("tx_day", dayofmonth(col(tsCol)))
+
+  /** Date-partitioned parquet sink (reference: src/spark/jobs/spark.py
+    * fraud sink partitioned by payment_method/tx_year/tx_month/tx_day)
+    * for foreachBatch, landed exactly-once by [[landBatch]]: the
+    * micro-batch id leads the reference's partition columns, so a
+    * replayed batch replaces its own subtree. `readPartitioned` still
+    * prunes on all partition columns.
     */
   def writeDatePartitionedExactlyOnce(df: DataFrame, tsCol: String, path: String,
                                       batchId: Long,
                                       extraPartitionCols: Seq[String] = Seq("payment_method")): Unit =
-    writeDateParts(df.withColumn("batch_id", lit(batchId)), tsCol, path,
-      Seq("batch_id") ++ extraPartitionCols, "overwrite", dynamicOverwrite = true)
+    landBatch(withDateParts(df, tsCol), path, batchId, extraPartitionCols ++ dateParts)
+
+  /** The exactly-once batch sink: `batch_id` is the leading partition
+    * column and the write is a per-write DYNAMIC partition overwrite,
+    * so replaying batch N (a crash between the sink write and the
+    * checkpoint commit) replaces exactly its `batch_id=N/` subtree
+    * instead of appending duplicates. With a replayable source this is
+    * end-to-end exactly-once by layout, not by fencing. The overwrite
+    * mode is an option of this write, never a session conf, so no
+    * concurrent write on the shared session inherits it.
+    *
+    * Distribution is Spark's REBALANCE hint on the partition columns.
+    * On a small batch AQE lays it out as `repartition` on the same
+    * columns would: one file per leaf per task. A batch that
+    * concentrates in one leaf (a constant `batch_id`, one day of one
+    * payment method) is split at the advisory partition size across
+    * tasks instead of funnelled through one.
+    */
+  def landBatch(df: DataFrame, dir: String, batchId: Long,
+                partitionCols: Seq[String] = Nil): Unit = {
+    val parts = "batch_id" +: partitionCols
+    df.withColumn("batch_id", lit(batchId))
+      .hint("rebalance", parts.map(col): _*)
+      .write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(parts: _*)
+      .parquet(dir)
+  }
+
+  /** Run `stream` into [[landBatch]] at `dir`: each micro-batch lands
+    * `perBatch(batch)` under its own `batch_id`. AvailableNow drains the
+    * backlog, then stops; swap the trigger for a continuous deployment.
+    *
+    * A crashed staging swap on `dir` (consolidation, compaction) is
+    * healed BEFORE the first batch can recreate the table dir: once
+    * `dir` exists again, [[recoverCrashedSwap]] can no longer see the
+    * stranded staging copy, reads silently lose all pre-crash history,
+    * and the next swap's staging cleanup destroys it. The stream writer
+    * is the first thing an operator restarts after a crash, so the heal
+    * sits on this path too, not only on serve and consolidate.
+    */
+  def landEachBatch(stream: DataFrame, dir: String, checkpoint: String,
+                    partitionCols: Seq[String] = Nil)
+                   (perBatch: DataFrame => DataFrame): StreamingQuery = {
+    recoverCrashedSwap(stream.sparkSession, dir)
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        landBatch(perBatch(batch), dir, id, partitionCols)
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+  }
+
+  /** Replace the [[landBatch]] table at `dir` with `cells`, which carry
+    * their own `batch_id`, through [[stagingSwap]]: the rewrite side of
+    * the layout (retention folds), which readers and crashes see whole
+    * or not at all.
+    */
+  private[graft] def swapBatches(cells: DataFrame, dir: String): Unit =
+    stagingSwap(cells.sparkSession, dir) { staging =>
+      cells.repartition(col("batch_id"))
+        .write.mode("overwrite").partitionBy("batch_id").parquet(staging)
+    }
 
   /** Bucketed table write: pre-shuffles once at write time so every
     * subsequent equi-join/aggregation on the bucket key is shuffle-free —
@@ -370,16 +409,6 @@ object Tables {
       .drop("__graft_rn")
   }
 
-  /** Distributed MERGE: latest-row-per-key upsert (reference:
-    * src/snowflake/load_to_snowflake_transction.py MERGE ON
-    * transaction_id,timestamp via a staging table).
-    *
-    * Spark-first: union base + updates, then keep the newest row per key
-    * with a single row_number over (key, version desc). One shuffle on the
-    * key — the same plan a warehouse MERGE compiles to — and scales to any
-    * number of executors; ties broken by the trailing version columns so
-    * the result is deterministic.
-    */
   /** Parquet read with schema merging across files — incremental loads
     * evolve (a new column appears in this month's slice); merged read
     * unions the per-file schemas and null-backfills older files.
@@ -543,23 +572,44 @@ object Tables {
     * the table's writer is quiesced (between micro-batch triggers, or
     * with the stream stopped), the standard maintenance-window contract
     * for non-transactional table layouts.
+    *
+    * A partition column the table already has but `partitionCols`
+    * omits stays a partition column, ahead of `partitionCols`. On the
+    * [[landBatch]] sink that is `batch_id`: compaction merges files only
+    * within each batch's leaves, and the next batch (or a replay) still
+    * lands as its own `batch_id=N/` subtree. Turning `batch_id` into a
+    * data column instead would make every later read fail with
+    * CONFLICTING_PARTITION_COLUMN_NAMES once one more batch landed.
+    *
+    * A table already in the requested layout with at most
+    * `filesPerPartition` files in every leaf is left untouched: there
+    * is nothing to merge, and the rewrite would cost a full read and
+    * write. The [[landBatch]] sink, which lands one file per leaf per
+    * batch, is usually in that state.
     */
   def compactPartitioned(spark: SparkSession, dir: String,
                          partitionCols: Seq[String],
                          filesPerPartition: Int = 1): Unit = {
     recoverCrashedSwap(spark, dir)
     val df = spark.read.parquet(dir)
-    val dataCols = df.columns.filterNot(partitionCols.contains).toSeq
+    val table = df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect { case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r }
+    val existing = table.map(_.partitionSchema.fieldNames.toSeq).getOrElse(Nil)
+    val parts = existing.filterNot(partitionCols.contains) ++ partitionCols
+    if (parts == existing &&
+        table.exists(_.location.listFiles(Nil, Nil).forall(_.files.size <= filesPerPartition)))
+      return
+    val dataCols = df.columns.filterNot(parts.contains).toSeq
     // all-partition-column tables have no data columns to hash — every
     // row of a partition is identical, so one bucket is the compaction
     // (zero-arg hash() would throw AnalysisException)
     val bucket =
       if (dataCols.isEmpty) lit(0)
       else pmod(hash(dataCols.map(col): _*), lit(filesPerPartition))
-    val compacted = df.repartition(partitionCols.map(col) :+ bucket: _*)
+    val compacted = df.repartition(parts.map(col) :+ bucket: _*)
     stagingSwap(spark, dir) { staging =>
-      compacted.write.mode("overwrite")
-        .partitionBy(partitionCols: _*).parquet(staging)
+      compacted.write.mode("overwrite").partitionBy(parts: _*).parquet(staging)
     }
   }
 
@@ -652,15 +702,6 @@ object Tables {
     (removed ++ added ++ retyped).sortBy(_._1).toSeq
   }
 
-  /** The reference's warehouse-load job (src/airflow/dags/
-    * load_to_snowflake.py + scripts) as ONE idempotent library call:
-    * read the date-partitioned sink (partition columns recovered from
-    * paths, schemas merged across slices), align to the warehouse
-    * schema if the table exists, and MERGE on the key. Re-running the
-    * same load leaves the warehouse unchanged (the MERGE keeps
-    * newest-per-key), which is the property the orchestration retry
-    * loop relies on.
-    */
   /** A17 (round 12): EXTERNAL warehouse connectivity over JDBC — the
     * reference bulk-loads staged parquet into Snowflake
     * (src/snowflake_loader/load_to_snowflake_transction.py:57:
@@ -779,6 +820,17 @@ object Tables {
       .option("fetchsize", fetchSize)
       .load()
 
+  /** The connection's current schema — where an unqualified DDL name
+    * resolves. None on drivers predating JDBC 4.1 getSchema (callers
+    * fall back to unscoped metadata listings).
+    */
+  private def currentSchema(conn: java.sql.Connection): Option[String] =
+    try Option(conn.getSchema).filter(_.nonEmpty)
+    catch {
+      case _: AbstractMethodError |
+           _: java.sql.SQLFeatureNotSupportedException => None
+    }
+
   /** Existence probe that can NEVER confuse a transient failure with
     * absence: asks the connection's own catalog (JDBC DatabaseMetaData)
     * whether `table` exists, and lets every connection/auth/timeout
@@ -792,17 +844,6 @@ object Tables {
     * dialect's likeliest order, via targeted metadata lookups (never a
     * full catalog listing — a real warehouse has thousands of tables).
     */
-  /** The connection's current schema — where an unqualified DDL name
-    * resolves. None on drivers predating JDBC 4.1 getSchema (callers
-    * fall back to unscoped metadata listings).
-    */
-  private def currentSchema(conn: java.sql.Connection): Option[String] =
-    try Option(conn.getSchema).filter(_.nonEmpty)
-    catch {
-      case _: AbstractMethodError |
-           _: java.sql.SQLFeatureNotSupportedException => None
-    }
-
   def jdbcTableExists(url: String, table: String,
                       driver: String = derbyDriver): Boolean = {
     Class.forName(driver)
@@ -842,6 +883,49 @@ object Tables {
     } finally conn.close()
   }
 
+  /** ONE pass over a load batch: its row count and each key column's
+    * min/max envelope (interleaved lo/hi in key order; bounded driver
+    * state, 3 values per key). NULL-keyed rows are REJECTED loudly up
+    * front, before any write: keys are PK-like, and NULL never equals
+    * NULL, so a NULL key bypasses both the anti-join dedup and a
+    * MERGE's ON clause and lands again on every replay. Counting
+    * non-nulls also keeps an all-NULL first key from reading as an
+    * empty batch and silently dropping the other columns' rows.
+    */
+  private def checkedKeyEnvelope(batch: DataFrame, keys: Seq[String],
+                                 loader: String): (Long, org.apache.spark.sql.Row) = {
+    val aggs = count(lit(1)).as("__n") +: keys.flatMap(k => Seq(
+      count(col(k)).as(s"__nk_$k"),
+      min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
+    val stats = batch.agg(aggs.head, aggs.tail: _*).head()
+    val n = stats.getLong(0)
+    keys.zipWithIndex.foreach { case (k, i) =>
+      require(stats.getLong(1 + 3 * i) == n,
+        s"$loader: key column '$k' has ${n - stats.getLong(1 + 3 * i)} " +
+          "NULL(s) — keys are PK-like; a NULL key never matches an " +
+          "existing row and would land again on every replay")
+    }
+    (n, org.apache.spark.sql.Row.fromSeq(
+      keys.indices.flatMap(i => Seq(stats.get(2 + 3 * i), stats.get(3 + 3 * i)))))
+  }
+
+  /** The bounded anti-join probe: the warehouse's key projection
+    * filtered to the batch's min/max envelope per key column
+    * (`boundsRow` = interleaved lo/hi in key order, the output of the
+    * caller's one-pass batch agg). The range predicates push INTO the
+    * external scan — plan-asserted in SourcesSpec A17c, the guarantee
+    * that per-batch probe cost rides the batch's key span instead of
+    * the warehouse's full history.
+    */
+  private[graft] def jdbcKeyProbe(spark: SparkSession, url: String,
+                                  table: String, keys: Seq[String],
+                                  boundsRow: org.apache.spark.sql.Row): DataFrame = {
+    val envelope = keys.zipWithIndex.map { case (k, i) =>
+      col(k) >= lit(boundsRow.get(2 * i)) && col(k) <= lit(boundsRow.get(2 * i + 1))
+    }.reduce(_ && _)
+    jdbcRead(spark, url, table).select(keys.map(col): _*).filter(envelope)
+  }
+
   /** Retry-safe incremental JDBC load: first load CREATEs the typed
     * table; later loads append ONLY the keys the warehouse does not
     * already hold, so a crashed-and-replayed load — or the same batch
@@ -867,48 +951,12 @@ object Tables {
     *    key span, not O(total landed warehouse history) — the classic
     *    grows-forever JDBC anti-join bottleneck.
     */
-  /** The bounded anti-join probe: the warehouse's key projection
-    * filtered to the batch's min/max envelope per key column
-    * (`boundsRow` = interleaved lo/hi in key order, the output of the
-    * caller's one-pass batch agg). The range predicates push INTO the
-    * external scan — plan-asserted in SourcesSpec A17c, the guarantee
-    * that per-batch probe cost rides the batch's key span instead of
-    * the warehouse's full history.
-    */
-  private[graft] def jdbcKeyProbe(spark: SparkSession, url: String,
-                                  table: String, keys: Seq[String],
-                                  boundsRow: org.apache.spark.sql.Row): DataFrame = {
-    val envelope = keys.zipWithIndex.map { case (k, i) =>
-      col(k) >= lit(boundsRow.get(2 * i)) && col(k) <= lit(boundsRow.get(2 * i + 1))
-    }.reduce(_ && _)
-    jdbcRead(spark, url, table).select(keys.map(col): _*).filter(envelope)
-  }
-
   def jdbcIncrementalLoad(spark: SparkSession, batch: DataFrame, url: String,
                           table: String, keys: Seq[String],
                           columnTypes: String = "",
                           tableExists: (String, String) => Boolean =
                             jdbcTableExists(_, _)): Unit = {
-    // ONE pass over the micro-batch: row count, per-key non-null count,
-    // and the key envelope (bounded driver state: 3 values per key).
-    // NULL-keyed rows are REJECTED loudly up front — keys are PK-like,
-    // and NULL never equals NULL, so a NULL key would bypass the
-    // anti-join and land again on every replay; the old
-    // min-of-first-key emptiness test also read an all-NULL first key
-    // as "empty batch" and silently dropped the other columns' rows
-    // (round-13 advice — both failure modes close here).
-    val aggs = count(lit(1)).as("__n") +: keys.flatMap(k => Seq(
-      count(col(k)).as(s"__nk_$k"),
-      min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-    val stats = batch.agg(aggs.head, aggs.tail: _*).head()
-    val n = stats.getLong(0)
-    keys.zipWithIndex.foreach { case (k, i) =>
-      require(stats.getLong(1 + 3 * i) == n,
-        s"jdbcIncrementalLoad: key column '$k' has " +
-          s"${n - stats.getLong(1 + 3 * i)} NULL(s) — keys are PK-like; " +
-          "a NULL key bypasses the anti-join dedup and would duplicate " +
-          "on replay")
-    }
+    val (n, boundsRow) = checkedKeyEnvelope(batch, keys, "jdbcIncrementalLoad")
     if (!tableExists(url, table) &&
         jdbcCreateTyped(batch, url, table, columnTypes)) {
       // first load CREATEd the typed table and landed the batch (an
@@ -919,8 +967,6 @@ object Tables {
       // the peer has not landed (round-14 verdict: the old overwrite
       // arm dropped the peer's table here).
     } else if (n > 0) {
-      val boundsRow = org.apache.spark.sql.Row.fromSeq(
-        keys.indices.flatMap(i => Seq(stats.get(2 + 3 * i), stats.get(3 + 3 * i))))
       val existingKeys = jdbcKeyProbe(spark, url, table, keys, boundsRow)
       batch.join(existingKeys, keys, "left_anti").write.format("jdbc")
         .option("url", url).option("dbtable", table)
@@ -942,13 +988,17 @@ object Tables {
     * key history ever crosses the wire back to Spark, the strongest
     * form of the round-12 "bound the per-batch anti-join" item.
     * Replay-idempotent: re-merging the same staged batch updates every
-    * matched key to the values it already has.
+    * matched key to the values it already has. That holds only for
+    * non-NULL keys (`ON t.k = s.k` never matches NULL), so NULL-keyed
+    * batches are rejected before either arm, as in
+    * [[jdbcIncrementalLoad]].
     */
   def jdbcMergeLoad(spark: SparkSession, batch: DataFrame, url: String,
                     table: String, keys: Seq[String],
                     columnTypes: String = "",
                     tableExists: (String, String) => Boolean =
                       jdbcTableExists(_, _)): Unit = {
+    checkedKeyEnvelope(batch, keys, "jdbcMergeLoad")
     // create-or-fall-through (round-14 verdict): a first load that loses
     // the probe→create race to a peer merges its batch into the peer's
     // table instead of overwriting it. The probe is the same injectable
@@ -1139,6 +1189,15 @@ object Tables {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
 
+  /** The reference's warehouse-load job (src/airflow/dags/
+    * load_to_snowflake.py + scripts) as ONE idempotent library call:
+    * read the date-partitioned sink (partition columns recovered from
+    * paths, schemas merged across slices), align to the warehouse
+    * schema if the table exists, and MERGE on the key. Re-running the
+    * same load leaves the warehouse unchanged (the MERGE keeps
+    * newest-per-key), which is the property the orchestration retry
+    * loop relies on.
+    */
   def incrementalLoad(spark: SparkSession, sinkDir: String, warehouseDir: String,
                       keys: Seq[String], versionDesc: Seq[Column]): Unit = {
     val batch = readMergedSchema(spark, sinkDir)
@@ -1173,6 +1232,16 @@ object Tables {
           when(chg, lit(c)) }: _*)).otherwise("").as("changed_cols"))
   }
 
+  /** Distributed MERGE: latest-row-per-key upsert (reference:
+    * src/snowflake/load_to_snowflake_transction.py MERGE ON
+    * transaction_id,timestamp via a staging table).
+    *
+    * Spark-first: union base + updates, then keep the newest row per key
+    * with a single row_number over (key, version desc). One shuffle on the
+    * key — the same plan a warehouse MERGE compiles to — and scales to any
+    * number of executors; ties broken by the trailing version columns so
+    * the result is deterministic.
+    */
   def mergeUpsert(base: DataFrame, updates: DataFrame, keys: Seq[String],
                   versionDesc: Seq[Column]): DataFrame = {
     // MERGE semantics: on a full version tie the UPDATE wins over the

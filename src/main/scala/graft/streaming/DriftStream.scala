@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Fraud
+import graft.sources.Tables
 
 /** H17: streaming distribution-drift monitor — the c23/c24 grid kept up
   * to date by the stream itself, so "has live spend drifted from the
@@ -40,27 +41,12 @@ object DriftStream {
     * under `cellsDir/batch_id=<id>/`.
     */
   def maintainDriftCells(stream: DataFrame, lo: Double, hi: Double,
-                         cellsDir: String, checkpoint: String): StreamingQuery = {
-    // heal a crashed consolidation before the first batch can recreate
-    // the dir (the SketchStream lesson — the stream writer is the first
-    // thing an operator restarts)
-    graft.sources.Tables.recoverCrashedSwap(stream.sparkSession, cellsDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.filter(col("value").isNotNull)
-          .select(Fraud.driftBucket(col("value"), lo, hi).as("bucket"))
-          .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
-          .withColumn("batch_id", lit(id))
-          .repartition(col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                         cellsDir: String, checkpoint: String): StreamingQuery =
+    Tables.landEachBatch(stream, cellsDir, checkpoint) { batch =>
+      batch.filter(col("value").isNotNull)
+        .select(Fraud.driftBucket(col("value"), lo, hi).as("bucket"))
+        .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
+    }
 
   /** H21: streaming vocabulary-drift monitor — the text twin of the
     * value-grid monitor above: each micro-batch of documents lands its
@@ -76,22 +62,9 @@ object DriftStream {
     * shared expression, no drift.
     */
   def maintainTermCells(stream: DataFrame, cellsDir: String,
-                        checkpoint: String): StreamingQuery = {
-    graft.sources.Tables.recoverCrashedSwap(stream.sparkSession, cellsDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.TextAnalysis.termCells(batch)
-          .withColumn("batch_id", lit(id))
-          .repartition(col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                        checkpoint: String): StreamingQuery =
+    Tables.landEachBatch(stream, cellsDir, checkpoint)(
+      graft.operators.TextAnalysis.termCells)
 
   /** The maintained term cells merged against a reference cell table
     * (`term`, `cnt` — typically termCells of the training corpus) —
@@ -100,7 +73,7 @@ object DriftStream {
     */
   private def mergedTermCells(spark: SparkSession, cellsDir: String,
                               reference: DataFrame): DataFrame = {
-    graft.sources.Tables.recoverCrashedSwap(spark, cellsDir)
+    Tables.recoverCrashedSwap(spark, cellsDir)
     val incoming = spark.read.parquet(cellsDir)
       .groupBy(col("term")).agg(sum(col("cnt")).as("c1"))
     reference.select(col("term"), col("cnt").cast("long").as("c0"))
@@ -142,7 +115,7 @@ object DriftStream {
     */
   def psiFromDriftCells(spark: SparkSession, cellsDir: String,
                         reference: DataFrame): DataFrame = {
-    graft.sources.Tables.recoverCrashedSwap(spark, cellsDir)
+    Tables.recoverCrashedSwap(spark, cellsDir)
     val incoming = spark.read.parquet(cellsDir)
       .groupBy(col("bucket")).agg(sum(col("cnt")).as("c1"))
     val ref = reference.select(col("bucket"), col("cnt").as("c0"))

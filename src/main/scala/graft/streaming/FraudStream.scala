@@ -2,21 +2,24 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.Tables
 
 /** Structured-Streaming assembly of the reference pipeline
   * (reference: src/spark/jobs/spark.py process_stream / write_streams):
   * schema'd streaming file read → 15-min watermark → stream-static
-  * left-outer enrichment joins → rule scoring → 1-minute tumbling
-  * windowed aggregations (approx distinct, like the reference) →
-  * foreachBatch sinks writing date-partitioned parquet.
+  * left-outer enrichment joins → rule scoring ([[scoredStream]]), and
+  * 1-minute tumbling windowed trends over the scored rows (approx
+  * distinct, like the reference). [[start]] lands the scored stream in
+  * the date-partitioned parquet sink exactly-once, through
+  * `Tables.landEachBatch`.
   *
   * Scale: the stream side carries the watermark and all state is
   * windowed+watermarked, so state store size is bounded; dimension sides
-  * are static and broadcast; the partitioned sink repartitions by its
-  * partition columns before writing (no small-file explosion).
+  * are static and broadcast; the sink rebalances on its partition
+  * columns before writing (no small-file explosion, and no single-task
+  * funnel for a batch that lands in one leaf).
   */
 object FraudStream {
 
@@ -138,27 +141,15 @@ object FraudStream {
     * aged batches by the same decimal/long addition serving performs).
     */
   def maintainSpendTrendCells(events: DataFrame, cellsDir: String,
-                              checkpoint: String): StreamingQuery = {
-    graft.sources.Tables.recoverCrashedSwap(events.sparkSession, cellsDir)
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch
-          .groupBy(window(col("ts"), "1 hour"), col("user_id"))
-          .agg(sum(col("value").cast("decimal(18,6)")).as("dec_sum"),
-               countDistinct(col("event_id")).as("n_events"))
-          .select(col("window.start").as("ws"), col("window.end").as("we"),
-                  col("user_id"), col("dec_sum"), col("n_events"))
-          .withColumn("batch_id", lit(id))
-          .repartition(col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                              checkpoint: String): StreamingQuery =
+    Tables.landEachBatch(events, cellsDir, checkpoint) { batch =>
+      batch
+        .groupBy(window(col("ts"), "1 hour"), col("user_id"))
+        .agg(sum(col("value").cast("decimal(18,6)")).as("dec_sum"),
+             countDistinct(col("event_id")).as("n_events"))
+        .select(col("window.start").as("ws"), col("window.end").as("we"),
+                col("user_id"), col("dec_sum"), col("n_events"))
+    }
 
   /** Serve the user-spend trend from the maintained cells: fold the
     * decimal partials (exact) and the per-batch distinct counts, then
@@ -166,7 +157,7 @@ object FraudStream {
     * same terminal double cast.
     */
   def spendTrendFromCells(spark: SparkSession, cellsDir: String): DataFrame = {
-    graft.sources.Tables.recoverCrashedSwap(spark, cellsDir)
+    Tables.recoverCrashedSwap(spark, cellsDir)
     spark.read.parquet(cellsDir)
       .groupBy(col("ws"), col("we"), col("user_id"))
       .agg(sum(col("dec_sum")).as("dec_total"),
@@ -179,20 +170,18 @@ object FraudStream {
   }
 
   /** End-to-end pipeline start (reference: write_streams foreachBatch):
-    * scored records land in a date-partitioned parquet sink keyed by
-    * payment_method/tx_year/tx_month/tx_day; AvailableNow makes the same
-    * query usable for backfills and for deterministic tests.
+    * scored records land exactly-once ([[Tables.landEachBatch]]) in a
+    * date-partitioned parquet sink laid out
+    * batch_id/payment_method/tx_year/tx_month/tx_day, so a batch
+    * replayed after a crash replaces its own subtree instead of
+    * appending duplicates. AvailableNow makes the same query usable for
+    * backfills and for deterministic tests.
     */
   def start(spark: SparkSession, inputPath: String, users: DataFrame,
-            products: DataFrame, sinkPath: String, checkpointPath: String,
-            availableNow: Boolean = true): StreamingQuery = {
+            products: DataFrame, sinkPath: String,
+            checkpointPath: String): StreamingQuery = {
     val tx = Tables.readCsvStream(spark, inputPath, Tables.transactionSchema)
-    val scored = scoredStream(tx, users, products)
-    val writer = scored.writeStream
-      .option("checkpointLocation", checkpointPath)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Tables.writeDatePartitioned(batch, "timestamp", sinkPath)
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    Tables.landEachBatch(scoredStream(tx, users, products), sinkPath, checkpointPath,
+      "payment_method" +: Tables.dateParts)(Tables.withDateParts(_, "timestamp"))
   }
 }

@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
+import graft.sources.Tables
 
 /** H20: streaming vector-index maintenance — the ingestion half of a
   * vector store: embeddings arriving on a stream are cell-assigned
@@ -12,8 +13,8 @@ import graft.operators.Similarity
   * start — cell geometry must never drift between micro-batches, the
   * H12 shared-arithmetic rule: the assignment expression is the same
   * `Similarity.assignCells` the batch build uses) and landed under the
-  * index's delta layout partitioned by `(cell, batch_id)` with dynamic
-  * partition overwrite — a replayed micro-batch replaces exactly its
+  * index's delta layout partitioned by `(batch_id, cell)` through
+  * `Tables.landEachBatch` — a replayed micro-batch replaces exactly its
   * own subtree, so the delta is exactly-once BY LAYOUT (A6b's sink
   * discipline), with no read-modify-write of existing cells.
   *
@@ -26,31 +27,14 @@ import graft.operators.Similarity
   */
 object IndexStream {
 
-  /** Maintain `dir`'s delta from a stream of (vec_id, embedding) rows.
-    * Runs AvailableNow (drains the backlog then stops) — swap the
-    * trigger for a continuous deployment.
+  /** Maintain `dir`'s delta from a stream of (vec_id, embedding) rows,
+    * landed under `delta/batch_id=<id>/cell=<c>/`.
     */
   def maintainIvfIndex(stream: DataFrame, dir: String,
                        checkpoint: String): StreamingQuery = {
-    val spark = stream.sparkSession
-    val cents = Similarity.readCentroids(spark, dir)
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // per-WRITE dynamic overwrite (round-12 advice: the session-conf
-        // toggle here raced any concurrent writer on the shared session
-        // — its sibling maintainBandDelta was fixed in r11, this one
-        // kept the old shape)
-        Similarity.assignCells(Similarity.withNorm(batch), cents)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("cell", "batch_id")
-          .parquet(s"$dir/delta")
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    val cents = Similarity.readCentroids(stream.sparkSession, dir)
+    Tables.landEachBatch(stream, s"$dir/delta", checkpoint, Seq("cell"))(batch =>
+      Similarity.assignCells(Similarity.withNorm(batch), cents))
   }
 
   /** Base ∪ delta with per-vec_id precedence: the LATEST delta batch's
@@ -99,13 +83,13 @@ object IndexStream {
     * dominate probe I/O — the same trigger A13 uses.
     */
   def compactIndexDelta(spark: SparkSession, dir: String): Unit = {
-    graft.sources.Tables.recoverCrashedSwap(spark, s"$dir/vectors")
+    Tables.recoverCrashedSwap(spark, s"$dir/vectors")
     val base = spark.read.parquet(s"$dir/vectors")
     val delta =
       try Some(spark.read.parquet(s"$dir/delta"))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
     if (delta.isEmpty) return
-    graft.sources.Tables.stagingSwap(spark, s"$dir/vectors") { staging =>
+    Tables.stagingSwap(spark, s"$dir/vectors") { staging =>
       dedupPreferDelta(base, delta)
         .write.mode("overwrite").partitionBy("cell").parquet(staging)
     }
@@ -128,7 +112,7 @@ object IndexStream {
     */
   def probeMaintained(spark: SparkSession, dir: String, qVec: Array[Float],
                       k: Int, nProbes: Int = 2): DataFrame = {
-    graft.sources.Tables.recoverCrashedSwap(spark, s"$dir/vectors")
+    Tables.recoverCrashedSwap(spark, s"$dir/vectors")
     val cents = Similarity.readCentroids(spark, dir)
     val qNrm = math.sqrt(qVec.map(x => x.toDouble * x.toDouble).sum)
     require(qNrm > 0, "query vector has zero norm")
@@ -164,21 +148,5 @@ object IndexStream {
     */
   def maintainBandDelta(stream: DataFrame, dir: String,
                         checkpoint: String): StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // dynamic overwrite scoped to THIS write (round-11 advice: the
-        // previous session-conf toggle leaked dynamic semantics into
-        // any concurrent write during the batch window, and the
-        // restore raced with it)
-        graft.operators.Dedup.bandKeyed(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(dir)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Tables.landEachBatch(stream, dir, checkpoint)(graft.operators.Dedup.bandKeyed)
 }

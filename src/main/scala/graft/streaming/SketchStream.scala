@@ -2,9 +2,10 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Relational
+import graft.sources.Tables
 
 /** H12: streaming sketch maintenance — the count-min cell table kept up
   * to date by the stream itself, so heavy hitters are served from a
@@ -37,29 +38,8 @@ object SketchStream {
     * `keyCol`, land cells under `cellsDir/batch_id=<id>/`.
     */
   def maintainCms(stream: DataFrame, keyCol: String, cellsDir: String,
-                  checkpoint: String): StreamingQuery = {
-    // heal a crashed consolidation BEFORE the first batch can recreate
-    // the table dir: once cellsDir exists again, the target-missing
-    // check can no longer see the stranded staging copy, serves
-    // silently lose all pre-crash history, and the NEXT consolidation's
-    // staging cleanup would destroy it — the stream writer is the first
-    // thing an operator restarts after a crash, so the heal must sit on
-    // this path too, not only on serve/consolidate
-    graft.sources.Tables.recoverCrashedSwap(stream.sparkSession, cellsDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Relational.cmsCells(batch, keyCol)
-          .withColumn("batch_id", lit(id))
-          .repartition(col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                  checkpoint: String): StreamingQuery =
+    Tables.landEachBatch(stream, cellsDir, checkpoint)(Relational.cmsCells(_, keyCol))
 
   /** Serve heavy hitters from the maintained cell table: cell-wise sum
     * across batch partitions (integer — exact), then the same
@@ -71,7 +51,7 @@ object SketchStream {
                             keyCol: String, threshold: Long): DataFrame = {
     // self-heal a consolidation crash before reading (same pattern as
     // every other staged-swap table consumer)
-    graft.sources.Tables.recoverCrashedSwap(keyed.sparkSession, cellsDir)
+    Tables.recoverCrashedSwap(keyed.sparkSession, cellsDir)
     val merged = keyed.sparkSession.read.parquet(cellsDir)
       .groupBy(col("r"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
@@ -100,23 +80,11 @@ object SketchStream {
     * fold (contrast [[consolidateCells]]).
     */
   def maintainDailyHll(stream: DataFrame, keyCol: String, dayCol: String,
-                       cellsDir: String, checkpoint: String): StreamingQuery = {
-    graft.sources.Tables.recoverCrashedSwap(stream.sparkSession, cellsDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Relational.dailyHllCells(
-            batch.select(col(dayCol).as("ship_day"), col(keyCol)), keyCol)
-          .withColumn("batch_id", lit(id))
-          .repartition(col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                       cellsDir: String, checkpoint: String): StreamingQuery =
+    Tables.landEachBatch(stream, cellsDir, checkpoint) { batch =>
+      Relational.dailyHllCells(
+        batch.select(col(dayCol).as("ship_day"), col(keyCol)), keyCol)
+    }
 
   /** Serve per-day trailing-window distinct-count estimates from the
     * maintained cell table: (day, bucket) max across batch partitions
@@ -125,7 +93,7 @@ object SketchStream {
   def windowDistinctFromCells(spark: org.apache.spark.sql.SparkSession,
                               cellsDir: String,
                               windowDays: Int = 60): DataFrame = {
-    graft.sources.Tables.recoverCrashedSwap(spark, cellsDir)
+    Tables.recoverCrashedSwap(spark, cellsDir)
     val merged = spark.read.parquet(cellsDir)
       .groupBy(col("ship_day"), col("bucket"))
       .agg(max(col("rho")).as("rho"))
@@ -151,26 +119,13 @@ object SketchStream {
     */
   def maintainDailyHist(stream: DataFrame, valueCol: String, dayCol: String,
                         lo: Double, hi: Double,
-                        cellsDir: String, checkpoint: String): StreamingQuery = {
-    graft.sources.Tables.recoverCrashedSwap(stream.sparkSession, cellsDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val stats = batch.sparkSession.range(1)
-          .select(lit(lo).as("lo"), lit(hi).as("hi"))
-        Relational.dailyHistCells(
-            batch.select(col(dayCol).as("ship_day"), col(valueCol)),
-            valueCol, stats)
-          .withColumn("batch_id", lit(id))
-          .repartition(col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                        cellsDir: String, checkpoint: String): StreamingQuery =
+    Tables.landEachBatch(stream, cellsDir, checkpoint) { batch =>
+      val stats = batch.sparkSession.range(1)
+        .select(lit(lo).as("lo"), lit(hi).as("hi"))
+      Relational.dailyHistCells(
+        batch.select(col(dayCol).as("ship_day"), col(valueCol)), valueCol, stats)
+    }
 
   /** Serve per-day trailing-window quantiles from the maintained cell
     * table: (day, bucket) SUM across batch partitions (exact integer
@@ -180,7 +135,7 @@ object SketchStream {
   def windowQuantilesFromCells(spark: org.apache.spark.sql.SparkSession,
                                cellsDir: String, lo: Double, hi: Double,
                                windowDays: Int = 60): DataFrame = {
-    graft.sources.Tables.recoverCrashedSwap(spark, cellsDir)
+    Tables.recoverCrashedSwap(spark, cellsDir)
     val merged = spark.read.parquet(cellsDir)
       .groupBy(col("ship_day"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
@@ -207,22 +162,9 @@ object SketchStream {
     */
   def maintainSampleCells(stream: DataFrame, k: Int, cellsDir: String,
                           checkpoint: String,
-                          idCol: String = "doc_id"): StreamingQuery = {
-    graft.sources.Tables.recoverCrashedSwap(stream.sparkSession, cellsDir)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        graft.operators.Profile.uniformSampleK(batch, k, idCol)
-          .withColumn("batch_id", lit(id))
-          .repartition(col("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(cellsDir)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                          idCol: String = "doc_id"): StreamingQuery =
+    Tables.landEachBatch(stream, cellsDir, checkpoint)(
+      graft.operators.Profile.uniformSampleK(_, k, idCol))
 
   /** Serve the maintained sample: dedup by id across batch partitions,
     * re-cut the bottom-k — equals the one-shot batch sample exactly.
@@ -230,7 +172,7 @@ object SketchStream {
   def sampleFromCells(spark: org.apache.spark.sql.SparkSession,
                       cellsDir: String, k: Int,
                       idCol: String = "doc_id"): DataFrame = {
-    graft.sources.Tables.recoverCrashedSwap(spark, cellsDir)
+    Tables.recoverCrashedSwap(spark, cellsDir)
     spark.read.parquet(cellsDir)
       .select(col(idCol), col("source"), col("hk"))
       .distinct()
@@ -257,7 +199,7 @@ object SketchStream {
     * recent batches individually inspectable.
     *
     * Crash-safe via the same staged swap as A13 ([[graft.sources.Tables
-    * .stagingSwap]]): readers and crashes see the old layout or the new
+    * .swapBatches]]): readers and crashes see the old layout or the new
     * one, never a mix. SINGLE-WRITER like A13 — run only with the
     * maintenance stream quiesced (between triggers or stopped).
     */
@@ -270,7 +212,7 @@ object SketchStream {
     // copy stranded in staging) or, if the maintenance stream recreated
     // the dir meanwhile, the swap's staging cleanup would destroy the
     // stranded pre-crash counts
-    graft.sources.Tables.recoverCrashedSwap(spark, cellsDir)
+    Tables.recoverCrashedSwap(spark, cellsDir)
     // partition-path values read back as int when they fit; pin to long
     val cells = spark.read.parquet(cellsDir)
       .withColumn("batch_id", col("batch_id").cast("long"))
@@ -285,10 +227,6 @@ object SketchStream {
       .select(col("r"), col("bucket"), col("cnt"), lit(-1L).as("batch_id"))
     val keep = cells.filter(col("batch_id") >= cutoff)
       .select(col("r"), col("bucket"), col("cnt"), col("batch_id"))
-    graft.sources.Tables.stagingSwap(spark, cellsDir) { staging =>
-      folded.unionByName(keep)
-        .repartition(col("batch_id"))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(staging)
-    }
+    Tables.swapBatches(folded.unionByName(keep), cellsDir)
   }
 }

@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine than the one the specs, Verify and the benchmarks run. And
   * no operator or stream touches that conf: a setting made inside one
   * would change every concurrent query on the shared session. Nothing
-  * under src/main clones the session either.
+  * under src/main clones the session either, and only `Tables` spells
+  * the exactly-once `batch_id` sink.
   *
   * No Spark session: source walks, cheap enough for every `sbt test`.
   */
@@ -53,5 +54,14 @@ class SessionFactorySpec extends AnyFunSuite {
     // session's conf map, and nothing in the engine needs a second one
     val cloners = scalaSources(root).filter(p => read(p).contains("cloneSession"))
     assert(cloners.isEmpty, s"session cloned in: ${cloners.mkString(", ")}")
+    // one exactly-once sink: the batch_id dynamic-overwrite layout is
+    // spelled in Tables alone (landBatch), never hand-copied into a stream
+    val sink = root.resolve("graft/sources/Tables.scala")
+    val sinkLayout = """partitionOverwriteMode|partitionBy\("batch_id"""".r
+    def spellsSink(p: Path): Boolean = sinkLayout.findFirstIn(read(p)).isDefined
+    assert(spellsSink(sink), s"$sink no longer owns the sink — the walk is looking elsewhere")
+    val copies = scalaSources(root).filter(p => p != sink && spellsSink(p))
+    assert(copies.isEmpty,
+      s"hand-copied exactly-once sinks (use Tables.landBatch): ${copies.mkString(", ")}")
   }
 }

@@ -32,10 +32,11 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
       ("t2", "cash", 20.0, java.sql.Timestamp.valueOf("2024-02-20 11:00:00")),
       ("t3", "card", 30.0, java.sql.Timestamp.valueOf("2024-02-20 12:00:00")))
       .toDF("transaction_id", "payment_method", "amount", "timestamp")
-    Tables.writeDatePartitioned(df, "timestamp", dir)
+    Tables.writeDatePartitionedExactlyOnce(df, "timestamp", dir, batchId = 0)
 
-    // partition directories exist (reference layout: payment_method/year/month/day)
-    assert(Files.exists(Paths.get(dir, "payment_method=card", "tx_year=2024",
+    // partition directories exist (reference layout: payment_method/year/month/day,
+    // under the exactly-once sink's leading batch id)
+    assert(Files.exists(Paths.get(dir, "batch_id=0", "payment_method=card", "tx_year=2024",
       "tx_month=1", "tx_day=15")))
 
     val back = Tables.readPartitioned(spark, dir)
@@ -89,7 +90,9 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
         (s"a$i", "card", i * 1.0, java.sql.Timestamp.valueOf("2024-01-15 10:00:00")),
         (s"b$i", "cash", i * 2.0, java.sql.Timestamp.valueOf("2024-02-20 11:00:00")))
         .toDF("transaction_id", "payment_method", "amount", "timestamp")
-      Tables.writeDatePartitioned(df, "timestamp", dir)
+      Tables.withDateParts(df, "timestamp").coalesce(1)
+        .write.mode("append")
+        .partitionBy("payment_method" +: Tables.dateParts: _*).parquet(dir)
     }
     def filesPerPartition: Map[String, Int] = {
       val root = Paths.get(dir)
@@ -129,6 +132,57 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
     val back = Tables.readPartitioned(spark, dir)
     assert(back.count() === 2, "replayed batch appended duplicates")
     assert(back.select("transaction_id").distinct().count() === 2)
+  }
+
+  test("A6c compacting the exactly-once sink keeps batch_id a partition: later batches and replays still land") {
+    import spark.implicits._
+    val dir = tmpDir("graft_eo_compact")
+    def batch(id: String, day: String) =
+      Seq((id, "card", 10.0, java.sql.Timestamp.valueOf(s"2024-01-$day 10:00:00")))
+        .toDF("transaction_id", "payment_method", "amount", "timestamp")
+    Tables.writeDatePartitionedExactlyOnce(batch("t0", "15"), "timestamp", dir, batchId = 0)
+    Tables.writeDatePartitionedExactlyOnce(batch("t1", "16"), "timestamp", dir, batchId = 1)
+    // the nightly load's compaction columns, which do not name batch_id
+    Tables.compactPartitioned(spark, dir,
+      Seq("payment_method", "tx_year", "tx_month", "tx_day"))
+    Tables.writeDatePartitionedExactlyOnce(batch("t2", "17"), "timestamp", dir, batchId = 2)
+    // crash-replay of the batch landed after the compaction
+    Tables.writeDatePartitionedExactlyOnce(batch("t2", "17"), "timestamp", dir, batchId = 2)
+    val back = Tables.readPartitioned(spark, dir)
+    assert(back.count() === 3, "replay after compaction appended duplicates")
+    assert(back.select("transaction_id").distinct().count() === 3)
+    assert(Files.isDirectory(Paths.get(dir, "batch_id=0")),
+      "batch_id must stay the leading partition column")
+    assert(back.select("batch_id").distinct().count() === 3)
+  }
+
+  test("A6d a one-leaf batch lands across several files; its replay leaves one copy, compaction merges within its leaf") {
+    val dir = tmpDir("graft_eo_rebalance")
+    // one payment method, one day: every row lands in the same leaf
+    val batch = spark.range(0, 100000, 1, 8)
+      .select(concat(lit("t"), col("id")).as("transaction_id"), lit("card").as("payment_method"),
+        col("id").cast("double").as("amount"),
+        lit(java.sql.Timestamp.valueOf("2024-01-15 10:00:00")).as("timestamp"))
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "16k")
+    try {
+      Tables.writeDatePartitionedExactlyOnce(batch, "timestamp", dir, batchId = 0)
+      Tables.writeDatePartitionedExactlyOnce(batch, "timestamp", dir, batchId = 0)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val leaf = Paths.get(dir, "batch_id=0", "payment_method=card", "tx_year=2024",
+      "tx_month=1", "tx_day=15")
+    def files: Int = Option(new java.io.File(leaf.toString).listFiles())
+      .fold(0)(_.count(_.getName.endsWith(".parquet")))
+    assert(files > 1, s"a one-leaf batch was funnelled through one task: $files file(s)")
+    assert(Tables.readPartitioned(spark, dir).count() === 100000,
+      "the replay must replace the batch, not add to it")
+    // the nightly load's compaction columns: the batch's files merge
+    // within its own batch_id=0 leaf
+    Tables.compactPartitioned(spark, dir,
+      Seq("payment_method", "tx_year", "tx_month", "tx_day"))
+    assert(files === 1, s"compaction left $files file(s) in the batch's leaf")
+    assert(Tables.readPartitioned(spark, dir).count() === 100000)
   }
 
   test("A16 ORC round-trip: schema'd read-back is exact; filters push to the ORC scan") {
@@ -562,29 +616,33 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
     // round-13 advice: the old emptiness test (min-of-first-key IS
     // NULL) silently dropped a non-empty batch whose first key column
     // was all NULL, and NULL keys bypass the anti-join (NULL never
-    // equals NULL) so replays would duplicate them. Both polarities:
+    // equals NULL) so replays would duplicate them. The staged MERGE's
+    // ON clause never matches NULL either. Both polarities, both loaders:
     System.setProperty("derby.system.home", tmpDir("graft_derby_home8"))
     val url = Tables.jdbcUrl(tmpDir("graft_derby8") + "/wh")
-    Tables.jdbcIncrementalLoad(spark,
-      Seq(("t1", 10.0)).toDF("transaction_id", "amount"),
-      url, "tx_nullkey", Seq("transaction_id"), "transaction_id VARCHAR(64)")
+    type Loader = (org.apache.spark.sql.DataFrame, String, String) => Unit
+    val loaders: Seq[(String, Loader)] = Seq(
+      "tx_nullkey" -> ((b, t, types) => Tables.jdbcIncrementalLoad(spark, b, url, t,
+        Seq("transaction_id"), types)),
+      "tx_nullkey_merge" -> ((b, t, types) => Tables.jdbcMergeLoad(spark, b, url, t,
+        Seq("transaction_id"), types)))
     val bad = Seq((null.asInstanceOf[String], 99.0), ("t2", 20.0))
       .toDF("transaction_id", "amount")
-    val boom = intercept[IllegalArgumentException] {
-      Tables.jdbcIncrementalLoad(spark, bad, url, "tx_nullkey",
-        Seq("transaction_id"))
+    loaders.foreach { case (table, load) =>
+      // a NULL-keyed first load is rejected before the create arm
+      intercept[IllegalArgumentException](load(bad, table, "transaction_id VARCHAR(64)"))
+      assert(!Tables.jdbcTableExists(url, table), table)
+      load(Seq(("t1", 10.0)).toDF("transaction_id", "amount"), table,
+        "transaction_id VARCHAR(64)")
+      val boom = intercept[IllegalArgumentException](load(bad, table, ""))
+      assert(boom.getMessage.contains("NULL"), table)
+      // the rejected batch must not have partially landed
+      assert(Tables.jdbcRead(spark, url, table).count() === 1, table)
+      // a clean batch still loads, and a truly empty batch is a no-op
+      load(Seq(("t2", 20.0)).toDF("transaction_id", "amount"), table, "")
+      load(Seq.empty[(String, Double)].toDF("transaction_id", "amount"), table, "")
+      assert(Tables.jdbcRead(spark, url, table).count() === 2, table)
     }
-    assert(boom.getMessage.contains("NULL"))
-    // the rejected batch must not have partially landed
-    assert(Tables.jdbcRead(spark, url, "tx_nullkey").count() === 1)
-    // a clean batch still loads, and a truly empty batch is a no-op
-    Tables.jdbcIncrementalLoad(spark,
-      Seq(("t2", 20.0)).toDF("transaction_id", "amount"),
-      url, "tx_nullkey", Seq("transaction_id"))
-    Tables.jdbcIncrementalLoad(spark,
-      Seq.empty[(String, Double)].toDF("transaction_id", "amount"),
-      url, "tx_nullkey", Seq("transaction_id"))
-    assert(Tables.jdbcRead(spark, url, "tx_nullkey").count() === 2)
   }
 
   test("A17b stream -> JDBC warehouse: micro-batches land per-key exactly-once, replay is a no-op") {
@@ -757,7 +815,7 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
       ("t1", 10.0, "card", java.sql.Timestamp.valueOf("2024-03-01 10:00:00")),
       ("t2", 20.0, "cash", java.sql.Timestamp.valueOf("2024-03-01 11:00:00")))
       .toDF("transaction_id", "amount", "payment_method", "ts")
-    graft.sources.Tables.writeDatePartitioned(batch1, "ts", sink)
+    graft.sources.Tables.writeDatePartitionedExactlyOnce(batch1, "ts", sink, batchId = 0)
     graft.sources.Tables.incrementalLoad(spark, sink, wh,
       Seq("transaction_id"), Seq(col("ts")))
     // a later slice updates t2 and adds t3; its schema gained a column
@@ -766,7 +824,7 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
       ("t3", 30.0, "card", java.sql.Timestamp.valueOf("2024-03-02 10:00:00"), "web"))
       .toDF("transaction_id", "amount", "payment_method", "ts", "channel")
     val sink2 = tmpDir("graft_il_sink2")
-    graft.sources.Tables.writeDatePartitioned(batch2, "ts", sink2)
+    graft.sources.Tables.writeDatePartitionedExactlyOnce(batch2, "ts", sink2, batchId = 0)
     graft.sources.Tables.incrementalLoad(spark, sink2, wh,
       Seq("transaction_id"), Seq(col("ts")))
     def state() = spark.read.parquet(wh).collect()

@@ -48,11 +48,30 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     val byId = out.collect().map(r => r.getAs[String]("transaction_id") -> r).toMap
     assert(byId("t1").getAs[Double]("fraud_score") === 1.0)
     assert(byId("t2").getAs[Double]("fraud_score") === 0.0)
-    // reference sink layout: payment_method + date parts from event time
-    assert(Files.exists(Paths.get(sink, "payment_method=card", "tx_year=2024",
+    // reference sink layout: payment_method + date parts from event time,
+    // under the exactly-once sink's leading batch id
+    assert(Files.exists(Paths.get(sink, "batch_id=0", "payment_method=card", "tx_year=2024",
       "tx_month=3", "tx_day=1")))
     // discounted_price: base 2.0, discount 0% (reference percent semantics)
     assert(byId("t1").getAs[Double]("discounted_price") === 2.0)
+  }
+
+  test("H1b end-to-end sink is exactly-once: a batch replayed after a lost commit lands once") {
+    val in = tmpDir("graft_stream_replay_in")
+    val sink = tmpDir("graft_stream_replay_sink")
+    val ckpt = tmpDir("graft_stream_replay_ckpt")
+    writeTxCsv(in, "b0.csv", Seq(
+      "t1,1,20,s1,600.0,card,FRANCE,2024-03-01T10:00:00.000Z",
+      "t2,2,20,s1,5.0,cash,KENYA,2024-03-01T10:00:30.000Z"))
+    FraudStream.start(spark, in, usersDf, productsDf, sink, ckpt).awaitTermination()
+    // crash between the sink write and the checkpoint commit: batch 0's
+    // offsets are logged, its commit is not, so the restart replays it
+    Files.delete(Paths.get(ckpt, "commits", "0"))
+    Files.deleteIfExists(Paths.get(ckpt, "commits", ".0.crc"))
+    FraudStream.start(spark, in, usersDf, productsDf, sink, ckpt).awaitTermination()
+    val ids = Tables.readPartitioned(spark, sink)
+      .select("transaction_id").collect().map(_.getString(0)).toSeq.sorted
+    assert(ids === Seq("t1", "t2"), "the replayed batch appended duplicates")
   }
 
   test("H11 streaming embedding near-dup gate: in-bucket near-dups dropped, rest admitted") {
