@@ -1398,10 +1398,8 @@ object Dedup {
         greatest(col("idx_id"), col("new_id")).as("doc_b"))
     val base = spark.table(s"${name}_bands")
       .select(col("doc_id").as("idx_id"), col("bkey"))
-    val landed =
-      try Some(spark.read.parquet(deltaDir)
-        .select(col("doc_id").as("idx_id"), col("bkey")))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val landed = Tables.readIfPresent(spark, deltaDir)
+      .map(_.select(col("doc_id").as("idx_id"), col("bkey")))
     landed.map(cross).foldLeft(cross(base))(_ unionByName _)
       .unionByName(minhashCandidates(newLoad)).distinct()
   }

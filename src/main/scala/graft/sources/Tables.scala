@@ -430,20 +430,23 @@ object Tables {
     * delete-then-write and a mid-write crash would destroy the table
     * with nothing to recover). Replaying a
     * micro-batch is idempotent — the reference's staging-table MERGE
-    * contract (src/snowflake/load_to_snowflake_transction.py). At
-    * 100 TB scope the rewrite to touched partitions
-    * (writeDatePartitionedExactlyOnce) instead of the whole table.
+    * contract (src/snowflake/load_to_snowflake_transction.py). Every
+    * merge rewrites the whole table; scoping the rewrite to the
+    * partitions a batch touches is ROADMAP direction 2's open item.
     */
   def mergeIntoWarehouse(batch: DataFrame, dir: String, keys: Seq[String],
                          versionDesc: Seq[Column]): Unit = {
-    val spark = batch.sparkSession
-    recoverCrashedSwap(spark, dir)
-    val existing = readIfPresent(spark, dir)
-    val merged = existing match {
-      case Some(base) => mergeUpsert(base, batch, keys, versionDesc)
-      case None => mergeUpsert(batch.limit(0), batch, keys, versionDesc)
-    }
-    stagingSwap(spark, dir) { staging =>
+    recoverCrashedSwap(batch.sparkSession, dir)
+    mergeOnto(readIfPresent(batch.sparkSession, dir), batch, dir, keys, versionDesc)
+  }
+
+  /** The merge-and-swap half of [[mergeIntoWarehouse]], over a live
+    * table `existing` the caller has already healed and read once.
+    */
+  private def mergeOnto(existing: Option[DataFrame], batch: DataFrame, dir: String,
+                        keys: Seq[String], versionDesc: Seq[Column]): Unit = {
+    val merged = mergeUpsert(existing.getOrElse(batch.limit(0)), batch, keys, versionDesc)
+    stagingSwap(batch.sparkSession, dir) { staging =>
       merged.write.mode("overwrite").parquet(staging)
     }
   }
@@ -621,7 +624,7 @@ object Tables {
     * reader's missing-path trace; a directory that exists but holds no
     * readable parquet still reads as absent.
     */
-  private def readIfPresent(spark: SparkSession, dir: String): Option[DataFrame] = {
+  private[graft] def readIfPresent(spark: SparkSession, dir: String): Option[DataFrame] = {
     val path = new org.apache.hadoop.fs.Path(dir)
     if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) None
     else
@@ -720,6 +723,18 @@ object Tables {
 
   private val derbyDriver = "org.apache.derby.jdbc.EmbeddedDriver"
 
+  /** The one JDBC writer: connection, target and driver options spelled
+    * once for every write, as [[jdbcRead]] spells them for reads;
+    * `columnTypes` (when set) overrides the dialect's CREATE types.
+    */
+  private def jdbcWriter(df: DataFrame, url: String, table: String,
+                         columnTypes: String = "") = {
+    val w = df.write.format("jdbc")
+      .option("url", url).option("dbtable", table)
+      .option("driver", derbyDriver)
+    if (columnTypes.nonEmpty) w.option("createTableColumnTypes", columnTypes) else w
+  }
+
   /** Typed CREATE + load (mode Overwrite creates the table with the
     * dialect's column types; `columnTypes` overrides them — e.g.
     * VARCHAR(k) where a dialect would default a string to CLOB, the
@@ -731,13 +746,8 @@ object Tables {
     * verdict defect ([[jdbcCreateTyped]] is their arm).
     */
   def jdbcWriteTyped(df: DataFrame, url: String, table: String,
-                     columnTypes: String = ""): Unit = {
-    val w = df.write.format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .option("driver", derbyDriver)
-    (if (columnTypes.nonEmpty) w.option("createTableColumnTypes", columnTypes)
-     else w).mode("overwrite").save()
-  }
+                     columnTypes: String = ""): Unit =
+    jdbcWriter(df, url, table, columnTypes).mode("overwrite").save()
 
   /** First-load arm of the incremental/merge loaders: CREATE, never
     * overwrite. Round-14 verdict defect: the create arm called
@@ -758,18 +768,13 @@ object Tables {
     * fall-through that would misread a broken warehouse as a race.
     */
   private[graft] def jdbcCreateTyped(df: DataFrame, url: String, table: String,
-                                     columnTypes: String = ""): Boolean = {
-    val w = df.write.format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .option("driver", derbyDriver)
+                                     columnTypes: String = ""): Boolean =
     try {
-      (if (columnTypes.nonEmpty) w.option("createTableColumnTypes", columnTypes)
-       else w).mode("error").save()
+      jdbcWriter(df, url, table, columnTypes).mode("error").save()
       true
     } catch {
       case e: Throwable if isAlreadyExists(e) => false
     }
-  }
 
   /** Dialect-portable "table already exists" detector over the cause
     * chain: Spark's ErrorIfExists AnalysisException, or the SQLState a
@@ -968,9 +973,7 @@ object Tables {
       // arm dropped the peer's table here).
     } else if (n > 0) {
       val existingKeys = jdbcKeyProbe(spark, url, table, keys, boundsRow)
-      batch.join(existingKeys, keys, "left_anti").write.format("jdbc")
-        .option("url", url).option("dbtable", table)
-        .option("driver", derbyDriver)
+      jdbcWriter(batch.join(existingKeys, keys, "left_anti"), url, table)
         .mode("append").save()
     }
   }
@@ -1037,10 +1040,7 @@ object Tables {
       st.executeUpdate(
         s"CREATE TABLE $stage AS SELECT * FROM $table WITH NO DATA")
     }
-    batch.write.format("jdbc")
-      .option("url", url).option("dbtable", stage)
-      .option("driver", derbyDriver)
-      .mode("append").save()
+    jdbcWriter(batch, url, stage).mode("append").save()
     stage
   }
 
@@ -1201,11 +1201,14 @@ object Tables {
   def incrementalLoad(spark: SparkSession, sinkDir: String, warehouseDir: String,
                       keys: Seq[String], versionDesc: Seq[Column]): Unit = {
     val batch = readMergedSchema(spark, sinkDir)
-    // only the warehouse-existence probe may fail soft; an alignment
-    // error must surface, not silently merge the unaligned batch
-    val warehouseSchema = readIfPresent(spark, warehouseDir).map(_.schema)
-    val aligned = warehouseSchema.map(alignTo(batch, _)).getOrElse(batch)
-    mergeIntoWarehouse(aligned, warehouseDir, keys, versionDesc)
+    // heal a crashed swap BEFORE the probe: otherwise the probe misses a
+    // table the heal then restores, and the merge meets an unaligned
+    // batch. Only the existence probe may fail soft; an alignment error
+    // must surface, not silently merge the unaligned batch
+    recoverCrashedSwap(spark, warehouseDir)
+    val existing = readIfPresent(spark, warehouseDir)
+    val aligned = existing.map(w => alignTo(batch, w.schema)).getOrElse(batch)
+    mergeOnto(existing, aligned, warehouseDir, keys, versionDesc)
   }
 
   /** Keyed diff between two load slices — the audit report an incremental

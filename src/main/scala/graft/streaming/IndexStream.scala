@@ -85,9 +85,7 @@ object IndexStream {
   def compactIndexDelta(spark: SparkSession, dir: String): Unit = {
     Tables.recoverCrashedSwap(spark, s"$dir/vectors")
     val base = spark.read.parquet(s"$dir/vectors")
-    val delta =
-      try Some(spark.read.parquet(s"$dir/delta"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val delta = Tables.readIfPresent(spark, s"$dir/delta")
     if (delta.isEmpty) return
     Tables.stagingSwap(spark, s"$dir/vectors") { staging =>
       dedupPreferDelta(base, delta)
@@ -118,9 +116,7 @@ object IndexStream {
     require(qNrm > 0, "query vector has zero norm")
     val probeCells = Similarity.probeCellsFor(cents, qVec, qNrm, nProbes)
     val base = spark.read.parquet(s"$dir/vectors")
-    val delta =
-      try Some(spark.read.parquet(s"$dir/delta"))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    val delta = Tables.readIfPresent(spark, s"$dir/delta")
     dedupPreferDelta(
       base.filter(col("cell").isin(probeCells: _*)),
       delta.map(_.filter(col("cell").isin(probeCells: _*))))

@@ -1,7 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+
+import scala.reflect.runtime.universe.TypeTag
 
 /** Custom per-key streaming state (SURVEY §2 H3): running per-user
   * transaction velocity via flatMapGroupsWithState — the Spark-native
@@ -98,7 +100,20 @@ object Stateful {
         org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Update())
   }
 
+  /** The event shape every per-user event-ordered operator folds: the
+    * user key, a unique event id and the event time. [[Ev]] and
+    * [[TypedEv]] implement it with their plain case-class fields, so
+    * their encoders' schemas, and the state schemas built on them, are
+    * those fields alone.
+    */
+  trait UserEvent {
+    def user_id: Long
+    def event_id: Long
+    def ts: java.sql.Timestamp
+  }
+
   case class Ev(user_id: Long, event_id: Long, ts: java.sql.Timestamp, value: Double)
+      extends UserEvent
   case class EwmaState(trail: Seq[Double])
   case class EwmaFeature(user_id: Long, event_id: Long, ewma_value: Double)
 
@@ -106,6 +121,54 @@ object Stateful {
     * plus the wrapped operator's own state.
     */
   case class Reorder[E, S](buf: Seq[E], inner: S)
+
+  private def evMicros(ts: java.sql.Timestamp): Long =
+    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
+
+  /** The one event-order fold behind both combinators: the user's
+    * events sorted by FULL-precision (ts, event_id) — `getTime` alone
+    * would collapse sub-millisecond spacing — and folded through the
+    * operator's per-event `step` from state `st`. Returns the final
+    * state and every row the step emitted, in fold order. An
+    * `Option`-shaped step (one row or none) and a `Seq`-shaped one
+    * (H30's credits: a purchase fans out one row per buffered touch)
+    * both fit the step type.
+    */
+  private def foldInOrder[E <: UserEvent, S, O](st: S, evs: Seq[E],
+      step: (S, E) => (S, IterableOnce[O])): (S, Seq[O]) = {
+    var s = st
+    val out = evs
+      .sortBy(e => (e.ts.toInstant.getEpochSecond, e.ts.toInstant.getNano, e.event_id))
+      .flatMap { e =>
+        val (s2, o) = step(s, e)
+        s = s2
+        o
+      }
+    (s, out)
+  }
+
+  /** Per-user fold in ARRIVAL order: each micro-batch's events for a
+    * user go through [[foldInOrder]] in full and the result becomes
+    * the user's state — no buffer, no timer. Within a batch the order
+    * is exact; across batches it is arrival order, so parity with the
+    * batch feature requires per-user event-time-ordered arrival (the
+    * H13 ordering contract). [[reorderedByWatermark]] runs the same
+    * step under a guarantee instead.
+    */
+  private def inArrivalOrder[E <: UserEvent, S <: Product : TypeTag,
+                             O <: Product : TypeTag](
+      ds: Dataset[E], zero: S, step: (S, E) => (S, IterableOnce[O])): Dataset[O] = {
+    implicit val stEnc: Encoder[S] = Encoders.product[S]
+    implicit val outEnc: Encoder[O] = Encoders.product[O]
+    ds.groupByKey((e: E) => e.user_id)(Encoders.scalaLong)
+      .flatMapGroupsWithState[S, O](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (_: Long, evs: Iterator[E], state: GroupState[S]) =>
+          val (st, out) = foldInOrder(state.getOption.getOrElse(zero), evs.toSeq, step)
+          state.update(st)
+          out.iterator
+      }
+  }
 
   /** Watermark-based per-user reorder-and-fold (the r7 verdict's item
     * 4): the H13/H16/H22 cross-batch parity contracts required per-user
@@ -139,81 +202,45 @@ object Stateful {
     * `delay`-window slice of each user's events — bounded by the
     * source's actual disorder, not by history.
     *
-    * The per-event arithmetic is the SAME function object the
-    * arrival-order operator folds (ewmaStep/cusumStep/reactStep), so
-    * ordered-arrival parity cannot drift between the two variants.
+    * Each operator passes ONE step value (ewmaStep, cusumStep, ...) to
+    * both this combinator and [[inArrivalOrder]], and both run it
+    * through the one shared [[foldInOrder]], so ordered-arrival parity
+    * cannot drift between the two variants.
     */
-  private def reorderedByWatermark[E, S, O](
+  private def reorderedByWatermark[E <: UserEvent : TypeTag, S <: Product : TypeTag,
+                                   O <: Product : TypeTag](
       ds: Dataset[E], delay: String, zero: S,
-      keyOf: E => Long, tsOf: E => java.sql.Timestamp, tieOf: E => Long,
-      step: (S, E) => (S, Option[O]))(
-      implicit stEnc: org.apache.spark.sql.Encoder[Reorder[E, S]],
-      outEnc: org.apache.spark.sql.Encoder[O]): Dataset[O] =
-    reorderedByWatermarkMulti[E, S, O](ds, delay, zero, keyOf, tsOf, tieOf,
-      (s: S, e: E) => { val (s2, o) = step(s, e); (s2, o.toSeq) })
-
-  /** The multi-output core the Option-shaped combinator delegates to:
-    * one event may emit MANY rows (H30's attribution credits — a
-    * purchase fans out one credit per buffered touch). Same buffering,
-    * ripeness, and timer mechanics.
-    */
-  private def reorderedByWatermarkMulti[E, S, O](
-      ds: Dataset[E], delay: String, zero: S,
-      keyOf: E => Long, tsOf: E => java.sql.Timestamp, tieOf: E => Long,
-      step: (S, E) => (S, Seq[O]))(
-      implicit stEnc: org.apache.spark.sql.Encoder[Reorder[E, S]],
-      outEnc: org.apache.spark.sql.Encoder[O]): Dataset[O] = {
-    implicit val keyEnc = Encoders.scalaLong
+      step: (S, E) => (S, IterableOnce[O])): Dataset[O] = {
+    implicit val stEnc: Encoder[Reorder[E, S]] = Encoders.product[Reorder[E, S]]
+    implicit val outEnc: Encoder[O] = Encoders.product[O]
     ds.withWatermark("ts", delay)
-      .groupByKey(keyOf)
+      .groupByKey((e: E) => e.user_id)(Encoders.scalaLong)
       .flatMapGroupsWithState[Reorder[E, S], O](
         OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, evs: Iterator[E], state: GroupState[Reorder[E, S]]) =>
+        (_: Long, evs: Iterator[E], state: GroupState[Reorder[E, S]]) =>
           val st = state.getOption.getOrElse(Reorder(Vector.empty[E], zero))
-          val buf = st.buf ++ evs
           val wm = state.getCurrentWatermarkMs()
-          def micros(e: E): Long =
-            tsOf(e).toInstant.getEpochSecond * 1000000L +
-              tsOf(e).toInstant.getNano / 1000L
-          val (ripe, hold) = buf.partition(micros(_) <= wm * 1000L)
-          var inner = st.inner
-          val out = ripe.sortBy(e =>
-              (tsOf(e).toInstant.getEpochSecond, tsOf(e).toInstant.getNano,
-                tieOf(e)))
-            .flatMap { e =>
-              val (s2, o) = step(inner, e)
-              inner = s2
-              o
-            }
+          val (ripe, hold) = (st.buf ++ evs).partition(e => evMicros(e.ts) <= wm * 1000L)
+          val (inner, out) = foldInOrder(st.inner, ripe, step)
           state.update(Reorder(hold, inner))
           // timer strictly above the current watermark (Spark rejects
           // earlier): a held event's ms-truncated getTime can EQUAL wm
           // (held by its sub-ms component), hence the max with wm + 1
           if (hold.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(hold.map(tsOf(_).getTime).min, wm + 1L))
+            state.setTimeoutTimestamp(math.max(hold.map(_.ts.getTime).min, wm + 1L))
           out.iterator
       }
   }
-
-  /** The [[Ev]]-keyed shape every numeric reordered variant shares. */
-  private def reorderedByWatermarkEv[S, O](
-      ds: Dataset[Ev], delay: String, zero: S,
-      step: (S, Ev) => (S, Option[O]))(
-      implicit stEnc: org.apache.spark.sql.Encoder[Reorder[Ev, S]],
-      outEnc: org.apache.spark.sql.Encoder[O]): Dataset[O] =
-    reorderedByWatermark[Ev, S, O](ds, delay, zero,
-      _.user_id, _.ts, _.event_id, step)
 
   /** The per-event H13 arithmetic, shared verbatim between the
     * arrival-order operator and its watermark-reordered variant (the
     * psiFromCells sharing rule applied to streaming steps: one
     * function, so the two serve paths cannot drift).
     */
-  private def ewmaStep(trail: Seq[Double], e: Ev): (Seq[Double], EwmaFeature) = {
-    val t2 = (trail :+ e.value).takeRight(40)
-    (t2, EwmaFeature(e.user_id, e.event_id,
-      t2.foldLeft(0.0)((a, x) => (a + x) / 2.0)))
+  private def ewmaStep(st: EwmaState, e: Ev): (EwmaState, Option[EwmaFeature]) = {
+    val t2 = (st.trail :+ e.value).takeRight(40)
+    (EwmaState(t2), Some(EwmaFeature(e.user_id, e.event_id,
+      t2.foldLeft(0.0)((a, x) => (a + x) / 2.0))))
   }
 
   /** H13: online/offline feature PARITY — the streaming serve path of
@@ -239,26 +266,8 @@ object Stateful {
     * both the plain operator's divergence edge and the reordered
     * variant's restored bit-parity).
     */
-  def ewmaFeatures(ds: Dataset[Ev]): Dataset[EwmaFeature] = {
-    implicit val outEnc = Encoders.product[EwmaFeature]
-    implicit val stateEnc = Encoders.product[EwmaState]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[EwmaState, EwmaFeature](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[EwmaState]) =>
-          var trail = state.getOption.getOrElse(EwmaState(Nil)).trail
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts.toInstant.getEpochSecond, e.ts.toInstant.getNano, e.event_id))
-          val out = ordered.map { e =>
-            val (t2, f) = ewmaStep(trail, e)
-            trail = t2
-            f
-          }
-          state.update(EwmaState(trail))
-          out.iterator
-      }
-  }
+  def ewmaFeatures(ds: Dataset[Ev]): Dataset[EwmaFeature] =
+    inArrivalOrder(ds, EwmaState(Nil), ewmaStep)
 
   /** H13 under OUT-OF-ORDER arrival: the same exact EWMA arithmetic
     * behind the [[reorderedByWatermark]] stage, which buffers each
@@ -268,15 +277,8 @@ object Stateful {
     * within `delay` (the r7 verdict's item 4).
     */
   def ewmaFeaturesReordered(ds: Dataset[Ev],
-                            delay: String = "10 minutes"): Dataset[EwmaFeature] = {
-    implicit val outEnc = Encoders.product[EwmaFeature]
-    implicit val stEnc = Encoders.product[Reorder[Ev, EwmaState]]
-    reorderedByWatermarkEv[EwmaState, EwmaFeature](ds, delay, EwmaState(Nil),
-      (st, e) => {
-        val (t2, f) = ewmaStep(st.trail, e)
-        (EwmaState(t2), Some(f))
-      })
-  }
+                            delay: String = "10 minutes"): Dataset[EwmaFeature] =
+    reorderedByWatermark(ds, delay, EwmaState(Nil), ewmaStep)
 
   case class DocTokens(doc_id: Long, source: String, n_tokens: Long, hk: Long)
   case class BudgetState(cum_tokens: Long)
@@ -485,16 +487,19 @@ object Stateful {
     * NOT new BigDecimal(double) (exact binary), which diverges on
     * values like 0.1.
     */
-  private def cusumStep(k6: java.math.BigDecimal, h: java.math.BigDecimal,
-                        sUnscaled: Long, e: Ev): (Long, CusumScore) = {
+  private def cusumStep(k: java.math.BigDecimal, h: java.math.BigDecimal)
+      : (CusumState, Ev) => (CusumState, Option[CusumScore]) = {
+    val k6 = k.setScale(6)
     val zero = java.math.BigDecimal.ZERO.setScale(6)
-    var s = java.math.BigDecimal.valueOf(sUnscaled, 6)
-    val dev = java.math.BigDecimal.valueOf(e.value)
-      .setScale(6, java.math.RoundingMode.HALF_UP).subtract(k6)
-    s = s.add(dev)
-    if (s.signum() < 0) s = zero
-    (s.movePointRight(6).longValueExact(),
-      CusumScore(e.user_id, e.event_id, s.doubleValue, s.compareTo(h) > 0))
+    (st, e) => {
+      var s = java.math.BigDecimal.valueOf(st.s_unscaled, 6)
+      val dev = java.math.BigDecimal.valueOf(e.value)
+        .setScale(6, java.math.RoundingMode.HALF_UP).subtract(k6)
+      s = s.add(dev)
+      if (s.signum() < 0) s = zero
+      (CusumState(s.movePointRight(6).longValueExact()),
+        Some(CusumScore(e.user_id, e.event_id, s.doubleValue, s.compareTo(h) > 0)))
+    }
   }
 
   /** H16: online CUSUM — the streaming serve path of the batch c18
@@ -521,27 +526,8 @@ object Stateful {
   def cusumScores(ds: Dataset[Ev],
                   k: java.math.BigDecimal = new java.math.BigDecimal("50.0"),
                   h: java.math.BigDecimal = new java.math.BigDecimal("200.0"))
-      : Dataset[CusumScore] = {
-    implicit val outEnc = Encoders.product[CusumScore]
-    implicit val stateEnc = Encoders.product[CusumState]
-    implicit val keyEnc = Encoders.scalaLong
-    val k6 = k.setScale(6)
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[CusumState, CusumScore](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[CusumState]) =>
-          var su = state.getOption.getOrElse(CusumState(0L)).s_unscaled
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts.toInstant.getEpochSecond, e.ts.toInstant.getNano, e.event_id))
-          val out = ordered.map { e =>
-            val (s2, score) = cusumStep(k6, h, su, e)
-            su = s2
-            score
-          }
-          state.update(CusumState(su))
-          out.iterator
-      }
-  }
+      : Dataset[CusumScore] =
+    inArrivalOrder(ds, CusumState(0L), cusumStep(k, h))
 
   /** H16 under OUT-OF-ORDER arrival: [[cusumScores]]' exact step behind
     * the watermark reorder stage — ordered-arrival parity becomes a
@@ -550,16 +536,8 @@ object Stateful {
   def cusumScoresReordered(ds: Dataset[Ev],
       k: java.math.BigDecimal = new java.math.BigDecimal("50.0"),
       h: java.math.BigDecimal = new java.math.BigDecimal("200.0"),
-      delay: String = "10 minutes"): Dataset[CusumScore] = {
-    implicit val outEnc = Encoders.product[CusumScore]
-    implicit val stEnc = Encoders.product[Reorder[Ev, CusumState]]
-    val k6 = k.setScale(6)
-    reorderedByWatermarkEv[CusumState, CusumScore](ds, delay, CusumState(0L),
-      (st, e) => {
-        val (s2, score) = cusumStep(k6, h, st.s_unscaled, e)
-        (CusumState(s2), Some(score))
-      })
-  }
+      delay: String = "10 minutes"): Dataset[CusumScore] =
+    reorderedByWatermark(ds, delay, CusumState(0L), cusumStep(k, h))
 
   case class StructState(band_us: Seq[Long])
   case class StructuringAlert(user_id: Long, event_id: Long, value: Double,
@@ -573,14 +551,13 @@ object Stateful {
     * survivors, exactly the batch c39 RANGE frame (integer micros,
     * integer count).
     */
-  private def structuringStep(lo: Double, hi: Double, windowMicros: Long,
+  private def structuringStep(lo: Double, hi: Double, windowDays: Int,
                               minCount: Int)(st: StructState, e: Ev)
       : (StructState, Option[StructuringAlert]) =
     if (e.value < lo || e.value >= hi) (st, None)
     else {
-      val us = e.ts.toInstant.getEpochSecond * 1000000L +
-        e.ts.toInstant.getNano / 1000L
-      val kept = st.band_us.filter(_ > us - windowMicros)
+      val us = evMicros(e.ts)
+      val kept = st.band_us.filter(_ > us - windowDays * 86400000000L)
       val n = kept.size + 1L
       (StructState(kept :+ us),
         if (n >= minCount) Some(StructuringAlert(e.user_id, e.event_id, e.value, n))
@@ -610,27 +587,8 @@ object Stateful {
     */
   def structuringAlerts(ds: Dataset[Ev], lo: Double = 90.0, hi: Double = 100.0,
                         windowDays: Int = 7, minCount: Int = 3)
-      : Dataset[StructuringAlert] = {
-    implicit val outEnc = Encoders.product[StructuringAlert]
-    implicit val stateEnc = Encoders.product[StructState]
-    implicit val keyEnc = Encoders.scalaLong
-    val step = structuringStep(lo, hi, windowDays * 86400000000L, minCount) _
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[StructState, StructuringAlert](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[StructState]) =>
-          var st = state.getOption.getOrElse(StructState(Nil))
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts.toInstant.getEpochSecond, e.ts.toInstant.getNano, e.event_id))
-          val out = ordered.flatMap { e =>
-            val (s2, o) = step(st, e)
-            st = s2
-            o
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+      : Dataset[StructuringAlert] =
+    inArrivalOrder(ds, StructState(Nil), structuringStep(lo, hi, windowDays, minCount))
 
   /** H32 under OUT-OF-ORDER arrival: [[structuringAlerts]]' exact step
     * behind the watermark reorder stage — a late-arriving early event
@@ -640,17 +598,19 @@ object Stateful {
     */
   def structuringAlertsReordered(ds: Dataset[Ev], lo: Double = 90.0,
       hi: Double = 100.0, windowDays: Int = 7, minCount: Int = 3,
-      delay: String = "10 minutes"): Dataset[StructuringAlert] = {
-    implicit val outEnc = Encoders.product[StructuringAlert]
-    implicit val stEnc = Encoders.product[Reorder[Ev, StructState]]
-    val step = structuringStep(lo, hi, windowDays * 86400000000L, minCount) _
-    reorderedByWatermarkEv[StructState, StructuringAlert](ds, delay,
-      StructState(Nil), (st, e) => step(st, e))
-  }
+      delay: String = "10 minutes"): Dataset[StructuringAlert] =
+    reorderedByWatermark(ds, delay, StructState(Nil),
+      structuringStep(lo, hi, windowDays, minCount))
 
   case class ReactState(last_day: Long, prior_sum_unscaled: Long, prior_n: Long)
   case class ReactivationAlert(user_id: Long, event_id: Long, gap_days: Long,
                                prior_mean: Double, value: Double)
+
+  /** H22's zero state: null means "no prior event" (a first-ever event
+    * never alerts). Under the reorder stage it rides inside the Reorder
+    * wrapper as a null struct field.
+    */
+  private val noPrior: ReactState = null
 
   /** The per-event H22 arithmetic (null prior = first-ever event),
     * shared verbatim by the arrival-order operator and its reordered
@@ -660,9 +620,8 @@ object Stateful {
     * shortest-decimal-then-HALF_UP conversion the batch DECIMAL(18,6)
     * cast applies (the H16 rule).
     */
-  private def reactStep(dormantDays: Long, burstFactor: Double,
-                        st: ReactState, e: Ev)
-      : (ReactState, Option[ReactivationAlert]) = {
+  private def reactStep(dormantDays: Long, burstFactor: Double)(
+      st: ReactState, e: Ev): (ReactState, Option[ReactivationAlert]) = {
     val day = e.ts.toInstant
       .atZone(java.time.ZoneOffset.UTC).toLocalDate.toEpochDay
     val alert =
@@ -708,40 +667,16 @@ object Stateful {
     * longValueExact at ~9.2e12 (scale 6), the CUSUM bound.
     */
   def reactivationAlerts(ds: Dataset[Ev], dormantDays: Long = 2L,
-                         burstFactor: Double = 1.5): Dataset[ReactivationAlert] = {
-    implicit val outEnc = Encoders.product[ReactivationAlert]
-    implicit val stateEnc = Encoders.product[ReactState]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[ReactState, ReactivationAlert](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[ReactState]) =>
-          var st = state.getOption.orNull
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts.toInstant.getEpochSecond, e.ts.toInstant.getNano, e.event_id))
-          val out = ordered.flatMap { e =>
-            val (s2, alert) = reactStep(dormantDays, burstFactor, st, e)
-            st = s2
-            alert
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+                         burstFactor: Double = 1.5): Dataset[ReactivationAlert] =
+    inArrivalOrder(ds, noPrior, reactStep(dormantDays, burstFactor))
 
   /** H22 under OUT-OF-ORDER arrival: [[reactivationAlerts]]' exact step
-    * behind the watermark reorder stage. The null "no prior" state
-    * rides inside the Reorder wrapper as a null struct field.
+    * behind the watermark reorder stage.
     */
   def reactivationAlertsReordered(ds: Dataset[Ev], dormantDays: Long = 2L,
       burstFactor: Double = 1.5,
-      delay: String = "10 minutes"): Dataset[ReactivationAlert] = {
-    implicit val outEnc = Encoders.product[ReactivationAlert]
-    implicit val stEnc = Encoders.product[Reorder[Ev, ReactState]]
-    reorderedByWatermarkEv[ReactState, ReactivationAlert](ds, delay,
-      null.asInstanceOf[ReactState],
-      (st, e) => reactStep(dormantDays, burstFactor, st, e))
-  }
+      delay: String = "10 minutes"): Dataset[ReactivationAlert] =
+    reorderedByWatermark(ds, delay, noPrior, reactStep(dormantDays, burstFactor))
 
   case class DecayBuf(days: Seq[Long], v6s: Seq[Long])
   case class DecayedFeature(user_id: Long, event_id: Long, n_recent: Long,
@@ -782,26 +717,8 @@ object Stateful {
     * batch c34 row bit-for-bit. Ordering contract as H13; use
     * [[decayedFeaturesReordered]] for out-of-order sources.
     */
-  def decayedFeatures(ds: Dataset[Ev], maxAge: Long = 20L): Dataset[DecayedFeature] = {
-    implicit val outEnc = Encoders.product[DecayedFeature]
-    implicit val stateEnc = Encoders.product[DecayBuf]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[DecayBuf, DecayedFeature](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[DecayBuf]) =>
-          var st = state.getOption.getOrElse(DecayBuf(Nil, Nil))
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts.toInstant.getEpochSecond, e.ts.toInstant.getNano, e.event_id))
-          val out = ordered.flatMap { e =>
-            val (s2, f) = decayStep(maxAge)(st, e)
-            st = s2
-            f
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+  def decayedFeatures(ds: Dataset[Ev], maxAge: Long = 20L): Dataset[DecayedFeature] =
+    inArrivalOrder(ds, DecayBuf(Nil, Nil), decayStep(maxAge))
 
   /** H28 under OUT-OF-ORDER arrival: [[decayStep]] behind the watermark
     * reorder stage (the step prunes against a running max day, so the
@@ -809,15 +726,11 @@ object Stateful {
     * stale mixes).
     */
   def decayedFeaturesReordered(ds: Dataset[Ev], maxAge: Long = 20L,
-      delay: String = "10 minutes"): Dataset[DecayedFeature] = {
-    implicit val outEnc = Encoders.product[DecayedFeature]
-    implicit val stEnc = Encoders.product[Reorder[Ev, DecayBuf]]
-    reorderedByWatermarkEv[DecayBuf, DecayedFeature](ds, delay,
-      DecayBuf(Nil, Nil), decayStep(maxAge))
-  }
+      delay: String = "10 minutes"): Dataset[DecayedFeature] =
+    reorderedByWatermark(ds, delay, DecayBuf(Nil, Nil), decayStep(maxAge))
 
   case class TypedEv(user_id: Long, event_id: Long, ts: java.sql.Timestamp,
-                     event_type: String)
+                     event_type: String) extends UserEvent
   case class MotifState(t1: String, t2: String)
   case class MotifHit(user_id: Long, event_id: Long, t1: String, t2: String,
                       t3: String)
@@ -847,49 +760,23 @@ object Stateful {
     * exact equality, no FP recipe needed.
     */
   def motifAlerts(ds: Dataset[TypedEv],
-                  motifs: Seq[(String, String, String)]): Dataset[MotifHit] = {
-    implicit val outEnc = Encoders.product[MotifHit]
-    implicit val stateEnc = Encoders.product[MotifState]
-    implicit val keyEnc = Encoders.scalaLong
-    val ms = motifs.toSet
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[MotifState, MotifHit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[TypedEv], state: GroupState[MotifState]) =>
-          var st = state.getOption.getOrElse(MotifState("", ""))
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts.toInstant.getEpochSecond, e.ts.toInstant.getNano, e.event_id))
-          val out = ordered.flatMap { e =>
-            val (s2, hit) = motifStep(ms)(st, e)
-            st = s2
-            hit
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+                  motifs: Seq[(String, String, String)]): Dataset[MotifHit] =
+    inArrivalOrder(ds, MotifState("", ""), motifStep(motifs.toSet))
 
   /** H27 under OUT-OF-ORDER arrival: the same [[motifStep]] behind the
-    * (now event-type-generic) watermark reorder stage — a disordered
-    * pair of events would otherwise form phantom trigrams and miss real
-    * ones; within `delay` the hit set is the batch screen's exactly.
+    * watermark reorder stage — a disordered pair of events would
+    * otherwise form phantom trigrams and miss real ones; within `delay`
+    * the hit set is the batch screen's exactly.
     */
   def motifAlertsReordered(ds: Dataset[TypedEv],
       motifs: Seq[(String, String, String)],
-      delay: String = "10 minutes"): Dataset[MotifHit] = {
-    implicit val outEnc = Encoders.product[MotifHit]
-    implicit val stEnc = Encoders.product[Reorder[TypedEv, MotifState]]
-    reorderedByWatermark[TypedEv, MotifState, MotifHit](ds, delay,
-      MotifState("", ""), _.user_id, _.ts, _.event_id, motifStep(motifs.toSet))
-  }
+      delay: String = "10 minutes"): Dataset[MotifHit] =
+    reorderedByWatermark(ds, delay, MotifState("", ""), motifStep(motifs.toSet))
 
   case class TouchBuf(touches: Seq[(Long, String, Long)])
   case class TouchCredit(user_id: Long, purchase_id: Long, touch_id: Long,
                          touch_type: String, n_touches: Long, weight: Double,
                          is_last_touch: Boolean)
-
-  private def evMicros(ts: java.sql.Timestamp): Long =
-    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
 
   /** The per-event C36 arithmetic, shared by both H30 variants: keep
     * the user's (touch_id, touch_type, ts-micros) triples within
@@ -939,39 +826,16 @@ object Stateful {
     * otherwise under-count n and mis-split every weight).
     */
   def touchCredits(ds: Dataset[TypedEv],
-                   windowDays: Long = 7L): Dataset[TouchCredit] = {
-    implicit val outEnc = Encoders.product[TouchCredit]
-    implicit val stateEnc = Encoders.product[TouchBuf]
-    implicit val keyEnc = Encoders.scalaLong
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[TouchBuf, TouchCredit](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (uid: Long, evs: Iterator[TypedEv], state: GroupState[TouchBuf]) =>
-          var st = state.getOption.getOrElse(TouchBuf(Nil))
-          val ordered = evs.toSeq.sortBy(e =>
-            (e.ts.toInstant.getEpochSecond, e.ts.toInstant.getNano, e.event_id))
-          val out = ordered.flatMap { e =>
-            val (s2, credits) = touchStep(windowDays)(st, e)
-            st = s2
-            credits
-          }
-          state.update(st)
-          out.iterator
-      }
-  }
+                   windowDays: Long = 7L): Dataset[TouchCredit] =
+    inArrivalOrder(ds, TouchBuf(Nil), touchStep(windowDays))
 
   /** H30 under OUT-OF-ORDER arrival: [[touchStep]] behind the
-    * watermark reorder stage (the multi-output combinator's first
-    * client) — within `delay` the credit table is the batch c36
-    * report's exactly.
+    * watermark reorder stage — within `delay` the credit table is the
+    * batch c36 report's exactly.
     */
   def touchCreditsReordered(ds: Dataset[TypedEv], windowDays: Long = 7L,
-      delay: String = "10 minutes"): Dataset[TouchCredit] = {
-    implicit val outEnc = Encoders.product[TouchCredit]
-    implicit val stEnc = Encoders.product[Reorder[TypedEv, TouchBuf]]
-    reorderedByWatermarkMulti[TypedEv, TouchBuf, TouchCredit](ds, delay,
-      TouchBuf(Nil), _.user_id, _.ts, _.event_id, touchStep(windowDays))
-  }
+      delay: String = "10 minutes"): Dataset[TouchCredit] =
+    reorderedByWatermark(ds, delay, TouchBuf(Nil), touchStep(windowDays))
 
   def velocityAlerts(ds: Dataset[Tx], threshold: Long): Dataset[VelocityAlert] = {
     implicit val alertEnc = Encoders.product[VelocityAlert]

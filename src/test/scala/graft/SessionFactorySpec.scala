@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine than the one the specs, Verify and the benchmarks run. And
   * no operator or stream touches that conf: a setting made inside one
   * would change every concurrent query on the shared session. Nothing
-  * under src/main clones the session either, and only `Tables` spells
-  * the exactly-once `batch_id` sink.
+  * under src/main clones the session either, only `Tables` spells
+  * the exactly-once `batch_id` sink, and only `Stateful`'s shared fold
+  * spells the per-user event-order sort.
   *
   * No Spark session: source walks, cheap enough for every `sbt test`.
   */
@@ -63,5 +64,19 @@ class SessionFactorySpec extends AnyFunSuite {
     val copies = scalaSources(root).filter(p => p != sink && spellsSink(p))
     assert(copies.isEmpty,
       s"hand-copied exactly-once sinks (use Tables.landBatch): ${copies.mkString(", ")}")
+  }
+
+  test("the full-precision event-order sort is spelled in Stateful's shared fold alone") {
+    val stateful = root.resolve("graft/streaming/Stateful.scala")
+    // a sort whose key reads the sub-second part of the event time:
+    // whitespace-tolerant, and bounded to one brace-free expression
+    val eventOrder = """(?s)\bsort(?:By|With|ed)\b[^;{}]{0,200}?toInstant\s*\.\s*getNano""".r
+    def sorts(p: Path): Int = eventOrder.findAllIn(read(p)).size
+    assert(sorts(stateful) == 1,
+      s"$stateful spells the event-order sort ${sorts(stateful)} times — one per-user " +
+        "fold (foldInOrder) behind inArrivalOrder and reorderedByWatermark")
+    val copies = scalaSources(root).filter(p => p != stateful && sorts(p) > 0)
+    assert(copies.isEmpty,
+      s"hand-copied event-order folds (use Stateful's combinators): ${copies.mkString(", ")}")
   }
 }

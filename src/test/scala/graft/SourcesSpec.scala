@@ -841,20 +841,36 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
 
   test("C9c mergeIntoWarehouse recovers a swap crashed between delete and rename") {
     import spark.implicits._
-    val dir = tmpDir("graft_swap") + "/tbl"
-    val b0 = Seq((1, "a", 1L), (2, "b", 1L)).toDF("id", "v", "version")
-    Tables.mergeIntoWarehouse(b0, dir, Seq("id"), Seq(col("version")))
-    // simulate the crash window: target deleted, staging (the complete
-    // merged table) not yet renamed into place
-    val target = java.nio.file.Paths.get(dir)
-    val staging = target.getParent.resolve(s".${target.getFileName}__graft_staging")
-    java.nio.file.Files.move(target, staging)
-    // the replayed micro-batch must NOT wipe the surviving copy
-    val replay = Seq((2, "b2", 2L)).toDF("id", "v", "version")
-    Tables.mergeIntoWarehouse(replay, dir, Seq("id"), Seq(col("version")))
-    val m = spark.read.parquet(dir).collect()
-      .map(r => r.getAs[Int]("id") -> r.getAs[String]("v")).toMap
-    assert(m === Map(1 -> "a", 2 -> "b2"), "pre-crash rows must survive the replay")
+    // second loader: incrementalLoad over a sink that gained a column —
+    // its batch merges only if the schema probe sees the HEALED table
+    // and aligns to it (a probe before the heal sees no table)
+    val sink = tmpDir("graft_swap_sink")
+    Seq((2, "b2", 2L, "late")).toDF("id", "v", "version", "note")
+      .write.mode("overwrite").parquet(sink)
+    val loaders: Seq[(String, String => Unit)] = Seq(
+      "mergeIntoWarehouse" -> { dir =>
+        val replay = Seq((2, "b2", 2L)).toDF("id", "v", "version")
+        Tables.mergeIntoWarehouse(replay, dir, Seq("id"), Seq(col("version")))
+      },
+      "incrementalLoad" -> { dir =>
+        Tables.incrementalLoad(spark, sink, dir, Seq("id"), Seq(col("version")))
+      })
+    for ((loader, load) <- loaders) {
+      val dir = tmpDir("graft_swap") + "/tbl"
+      val b0 = Seq((1, "a", 1L), (2, "b", 1L)).toDF("id", "v", "version")
+      Tables.mergeIntoWarehouse(b0, dir, Seq("id"), Seq(col("version")))
+      // simulate the crash window: target deleted, staging (the complete
+      // merged table) not yet renamed into place
+      val target = java.nio.file.Paths.get(dir)
+      val staging = target.getParent.resolve(s".${target.getFileName}__graft_staging")
+      java.nio.file.Files.move(target, staging)
+      // the replayed load must NOT wipe the surviving copy
+      load(dir)
+      val out = spark.read.parquet(dir)
+      assert(out.columns.toSeq === Seq("id", "v", "version"), loader)
+      val m = out.collect().map(r => r.getAs[Int]("id") -> r.getAs[String]("v")).toMap
+      assert(m === Map(1 -> "a", 2 -> "b2"), s"$loader: pre-crash rows must survive the replay")
+    }
   }
 
   test("C9d mergeIntoWarehouse first load: a missing table and an empty directory both load the batch") {
