@@ -367,15 +367,12 @@ object Tables {
   }
 
   /** Replace the [[landBatch]] table at `dir` with `cells`, which carry
-    * their own `batch_id`, through [[stagingSwap]]: the rewrite side of
+    * their own `batch_id`, through [[replaceTable]]: the rewrite side of
     * the layout (retention folds), which readers and crashes see whole
     * or not at all.
     */
   private[graft] def swapBatches(cells: DataFrame, dir: String): Unit =
-    stagingSwap(cells.sparkSession, dir) { staging =>
-      cells.repartition(col("batch_id"))
-        .write.mode("overwrite").partitionBy("batch_id").parquet(staging)
-    }
+    replaceTable(cells.repartition(col("batch_id")), dir, Seq("batch_id"))
 
   /** Bucketed table write: pre-shuffles once at write time so every
     * subsequent equi-join/aggregation on the bucket key is shuffle-free —
@@ -419,37 +416,25 @@ object Tables {
     spark.read.option("mergeSchema", "true").parquet(path)
 
   /** foreachBatch MERGE into a parquet warehouse table: read current
-    * state, upsert the micro-batch (latest-per-key), replace via a
-    * staging-dir swap. The merged result is fully written to a sibling
-    * temp directory FIRST; only then is the live table deleted and the
-    * temp dir renamed into place — a crash mid-merge-write leaves the
-    * existing table untouched, and a crash between delete and rename
-    * leaves the complete staging dir, which [[recoverCrashedSwap]]
-    * renames back into place automatically on the next call (the rename
-    * window is metadata-only; a plain `mode("overwrite")` would
-    * delete-then-write and a mid-write crash would destroy the table
-    * with nothing to recover). Replaying a
+    * state, upsert the micro-batch (latest-per-key), replace through
+    * [[replaceTable]]'s staging-dir swap, so a crash mid-merge-write
+    * leaves the existing table untouched and a crash in the rename
+    * window heals on the next read. Replaying a
     * micro-batch is idempotent — the reference's staging-table MERGE
     * contract (src/snowflake/load_to_snowflake_transction.py). Every
     * merge rewrites the whole table; scoping the rewrite to the
     * partitions a batch touches is ROADMAP direction 2's open item.
     */
   def mergeIntoWarehouse(batch: DataFrame, dir: String, keys: Seq[String],
-                         versionDesc: Seq[Column]): Unit = {
-    recoverCrashedSwap(batch.sparkSession, dir)
+                         versionDesc: Seq[Column]): Unit =
     mergeOnto(readIfPresent(batch.sparkSession, dir), batch, dir, keys, versionDesc)
-  }
 
   /** The merge-and-swap half of [[mergeIntoWarehouse]], over a live
-    * table `existing` the caller has already healed and read once.
+    * table `existing` the caller has already read once.
     */
   private def mergeOnto(existing: Option[DataFrame], batch: DataFrame, dir: String,
-                        keys: Seq[String], versionDesc: Seq[Column]): Unit = {
-    val merged = mergeUpsert(existing.getOrElse(batch.limit(0)), batch, keys, versionDesc)
-    stagingSwap(batch.sparkSession, dir) { staging =>
-      merged.write.mode("overwrite").parquet(staging)
-    }
-  }
+                        keys: Seq[String], versionDesc: Seq[Column]): Unit =
+    replaceTable(mergeUpsert(existing.getOrElse(batch.limit(0)), batch, keys, versionDesc), dir)
 
   /** A14: sort-clustered table write — the layout half of the j4 bench
     * study as an API: range-partition on `clusterCol` (one contiguous
@@ -494,7 +479,6 @@ object Tables {
   def scd2MergeBatch(changes: DataFrame, dir: String): Unit = {
     import graft.Cols.fmtTs
     val spark = changes.sparkSession
-    recoverCrashedSwap(spark, dir)
     val existing = readIfPresent(spark, dir)
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val local = changes
@@ -528,30 +512,38 @@ object Tables {
           .otherwise(col("valid_to")))
       .withColumn("is_current", col("is_current") && col("first_ts").isNull)
       .drop("first_ts")
-    val merged = closed.unionByName(newRows)
-    stagingSwap(spark, dir) { staging =>
-      merged.write.mode("overwrite").parquet(staging)
-    }
+    replaceTable(closed.unionByName(newRows), dir)
   }
 
-  /** Write-fully-then-rename table replacement shared by
-    * [[mergeIntoWarehouse]] and [[compactPartitioned]]: the new layout
-    * is complete in a sibling staging dir before the live table is
-    * touched, the swap itself is a metadata-only rename, and a crash in
-    * the rename window is healed by [[recoverCrashedSwap]].
+  /** The one replacement of a swapped table (warehouse merges, SCD2,
+    * compaction, retention folds, index compaction): write-fully-then-
+    * rename. `df` lands complete in a sibling staging dir, partitioned
+    * by `partitionCols`, before the live table is touched; the swap
+    * itself is a metadata-only rename (a plain `mode("overwrite")`
+    * would delete-then-write, and a mid-write crash would destroy the
+    * table with nothing to recover). A crashed swap is healed FIRST,
+    * whoever calls: the staging cleanup below would otherwise destroy
+    * the only copy a crash in the rename window left behind.
     */
-  private[graft] def stagingSwap(spark: SparkSession, dir: String)
-                                (write: String => Unit): Unit = {
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}__graft_staging")
-    fs.delete(staging, true) // leftover from a previous crashed swap
-    write(staging.toString)
+  private[graft] def replaceTable(df: DataFrame, dir: String,
+                                  partitionCols: Seq[String] = Nil): Unit = {
+    val (fs, target, staging) = swapPaths(df.sparkSession, dir)
+    recoverCrashedSwap(df.sparkSession, dir)
+    fs.delete(staging, true) // after the heal, a leftover is a dead partial write
+    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(staging.toString)
     fs.delete(target, true)
     if (!fs.rename(staging, target))
       throw new java.io.IOException(
         s"table swap failed: staging data is intact at $staging")
+  }
+
+  /** The filesystem of `dir`, its path, and the sibling staging path
+    * its swaps write.
+    */
+  private def swapPaths(spark: SparkSession, dir: String) = {
+    val target = new org.apache.hadoop.fs.Path(dir)
+    (target.getFileSystem(spark.sparkContext.hadoopConfiguration), target,
+      new org.apache.hadoop.fs.Path(target.getParent, s".${target.getName}__graft_staging"))
   }
 
   /** A13: small-file compaction for a partitioned parquet sink — the
@@ -562,8 +554,8 @@ object Tables {
     * the table to at most `filesPerPartition` files per partition
     * directory: repartitioning on (partition cols + a deterministic
     * row-hash bucket) lands each partition's rows on that many shuffle
-    * tasks, and partitionBy lays them back out. The rewrite rides the
-    * same staging-dir swap as [[mergeIntoWarehouse]] — a reader (or a
+    * tasks, and partitionBy lays them back out. The rewrite rides
+    * [[replaceTable]]'s staging-dir swap — a reader (or a
     * crash) sees the old layout or the new one, never a mix — and the
     * bucket is a pure row function, so the rewritten content is
     * byte-for-byte the same rows (spec'd); only the file count drops.
@@ -593,8 +585,7 @@ object Tables {
   def compactPartitioned(spark: SparkSession, dir: String,
                          partitionCols: Seq[String],
                          filesPerPartition: Int = 1): Unit = {
-    recoverCrashedSwap(spark, dir)
-    val df = spark.read.parquet(dir)
+    val df = readLanded(spark, dir)
     val table = df.queryExecution.analyzed.collectFirst {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
     }.collect { case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation => r }
@@ -610,13 +601,11 @@ object Tables {
     val bucket =
       if (dataCols.isEmpty) lit(0)
       else pmod(hash(dataCols.map(col): _*), lit(filesPerPartition))
-    val compacted = df.repartition(parts.map(col) :+ bucket: _*)
-    stagingSwap(spark, dir) { staging =>
-      compacted.write.mode("overwrite").partitionBy(parts: _*).parquet(staging)
-    }
+    replaceTable(df.repartition(parts.map(col) :+ bucket: _*), dir, parts)
   }
 
-  /** The live table at `dir`, or None on a first load. Existence is
+  /** The live table at `dir`, or None on a first load, read after
+    * [[recoverCrashedSwap]] heals a crashed swap. Existence is
     * asked of the table's own Hadoop filesystem (not java.io.File), so
     * it holds for any Hadoop FS (hdfs://, s3a://, ...): a local-FS check
     * would misread a remote table as absent and the caller's overwrite
@@ -625,27 +614,36 @@ object Tables {
     * readable parquet still reads as absent.
     */
   private[graft] def readIfPresent(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) None
+    val (fs, target, _) = swapPaths(spark, dir)
+    recoverCrashedSwap(spark, dir)
+    if (!fs.exists(target)) None
     else
       try Some(spark.read.parquet(dir))
       catch { case _: org.apache.spark.sql.AnalysisException => None }
   }
 
-  /** Recovery half of [[mergeIntoWarehouse]]'s swap, run BEFORE the base
-    * read: a crash between the target delete and the staging rename
-    * leaves the complete staging dir as the ONLY copy of the table. On
-    * replay the base read would see no table and the pre-merge staging
+  /** The table at `dir`, read after [[recoverCrashedSwap]] heals a
+    * crashed swap: the serve paths, which require the table to exist
+    * (a missing table throws the reader's missing-path error).
+    */
+  private[graft] def readLanded(spark: SparkSession, dir: String): DataFrame = {
+    recoverCrashedSwap(spark, dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Heal a swap that crashed between the target delete and the staging
+    * rename, run inside every read and replace of a swapped table: the
+    * crash leaves the complete staging dir as the ONLY copy of the
+    * table. A read would see no table, and the next swap's staging
     * cleanup would destroy that only copy — so if the target is missing
     * and a staging dir exists, rename it back into place first. (If BOTH
     * exist, the staging dir is a dead partial write from a crash before
-    * the delete and remains safe to discard.)
+    * the delete and remains safe to discard.) Once a writer recreates
+    * `dir`, the stranded copy can no longer be told from a dead write,
+    * which is why [[landEachBatch]] heals before its first batch.
     */
-  private[graft] def recoverCrashedSwap(spark: SparkSession, dir: String): Unit = {
-    val target = new org.apache.hadoop.fs.Path(dir)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new org.apache.hadoop.fs.Path(
-      target.getParent, s".${target.getName}__graft_staging")
+  private def recoverCrashedSwap(spark: SparkSession, dir: String): Unit = {
+    val (fs, target, staging) = swapPaths(spark, dir)
     if (!fs.exists(target) && fs.exists(staging) && !fs.rename(staging, target))
       throw new java.io.IOException(
         s"crashed-swap recovery failed: table data is intact at $staging")
@@ -708,12 +706,13 @@ object Tables {
   /** A17 (round 12): EXTERNAL warehouse connectivity over JDBC — the
     * reference bulk-loads staged parquet into Snowflake
     * (src/snowflake_loader/load_to_snowflake_transction.py:57:
-    * CREATE TABLE IF NOT EXISTS with typed columns, then COPY). The
-    * sandbox has no network warehouse, but Spark's REAL JDBC connector
-    * against the embedded Derby engine (already on the image) proves
-    * the path the reference user runs: dialect type mapping, batched
-    * inserts, predicate pushdown INTO the external system's scan, and
-    * the retry-safe incremental-load shape. Swapping `url` (and the
+    * CREATE TABLE IF NOT EXISTS with typed columns, then stage and
+    * MERGE). The sandbox has no network warehouse, but Spark's REAL
+    * JDBC connector against the embedded Derby engine (already on the
+    * image) proves the path the reference user runs: dialect type
+    * mapping, batched inserts, predicate pushdown INTO the external
+    * system's scan, and the retry-safe staged-MERGE load
+    * ([[jdbcMergeLoad]]). Swapping `url` (and the
     * column-type overrides) for a network warehouse is configuration,
     * not code — exactly the seam the reference's loader scripts sit
     * behind. SourcesSpec A17 drives round-trip, pushdown, and replay
@@ -724,7 +723,7 @@ object Tables {
   private val derbyDriver = "org.apache.derby.jdbc.EmbeddedDriver"
 
   /** The one JDBC writer: connection, target and driver options spelled
-    * once for every write, as [[jdbcRead]] spells them for reads;
+    * once for every write, as [[jdbcReader]] spells them for reads;
     * `columnTypes` (when set) overrides the dialect's CREATE types.
     */
   private def jdbcWriter(df: DataFrame, url: String, table: String,
@@ -741,16 +740,16 @@ object Tables {
     * reference loader's explicit-typed-columns discipline).
     *
     * DESTRUCTIVE by contract (drops whatever the name held): fixture
-    * setup and explicit rebuilds only. The incremental/merge loaders'
-    * first-load arm must NEVER route here — that was the round-14
-    * verdict defect ([[jdbcCreateTyped]] is their arm).
+    * setup and explicit rebuilds only. The merge loader's first-load
+    * arm must NEVER route here — that was the round-14 verdict defect
+    * ([[jdbcCreateTyped]] is its arm).
     */
   def jdbcWriteTyped(df: DataFrame, url: String, table: String,
                      columnTypes: String = ""): Unit =
     jdbcWriter(df, url, table, columnTypes).mode("overwrite").save()
 
-  /** First-load arm of the incremental/merge loaders: CREATE, never
-    * overwrite. Round-14 verdict defect: the create arm called
+  /** First-load arm of [[jdbcMergeLoad]]: CREATE, never overwrite.
+    * Round-14 verdict defect: the create arm called
     * [[jdbcWriteTyped]] (mode overwrite), so a DELAYED first load —
     * loader A probes absent and stalls; loader B (an orchestrator
     * retry, or a concurrent first load) creates the table and lands
@@ -760,8 +759,8 @@ object Tables {
     * loses the race between our probe and the warehouse-side DDL
     * surfaces as the dialect's already-exists error. Both routes return
     * false — "a peer owns the table now" — and the caller falls through
-    * to its keyed arm (anti-join append / staged MERGE), which lands
-    * this batch WITHOUT touching the peer's rows. Matches the
+    * to its staged MERGE, which lands this batch into the peer's table
+    * instead of replacing it. Matches the
     * reference's own CREATE TABLE IF NOT EXISTS discipline
     * (load_to_snowflake_transction.py:57). Any other failure
     * (connection, auth, typing) propagates — never absorbed into a
@@ -792,18 +791,23 @@ object Tables {
         Option(t.getMessage).exists(_.toLowerCase.contains("already exists"))
     }
 
-  /** `fetchSize` batches the external cursor (the classic JDBC-read
-    * knob — most dialects default to row-at-a-time or full-table
-    * buffering; 10k rows per round-trip is the usual warehouse
-    * setting).
+  /** The one JDBC reader: connection, source, driver and cursor options
+    * spelled once for every read. `fetchSize` batches the external
+    * cursor (the classic JDBC-read knob — most dialects default to
+    * row-at-a-time or full-table buffering; 10k rows per round-trip is
+    * the usual warehouse setting).
     */
-  def jdbcRead(spark: SparkSession, url: String, table: String,
-               fetchSize: Int = 10000): DataFrame =
+  private def jdbcReader(spark: SparkSession, url: String, table: String,
+                         fetchSize: Int) =
     spark.read.format("jdbc")
       .option("url", url).option("dbtable", table)
       .option("driver", derbyDriver)
       .option("fetchsize", fetchSize)
-      .load()
+
+  /** The external table as one scan; filters push into it. */
+  def jdbcRead(spark: SparkSession, url: String, table: String,
+               fetchSize: Int = 10000): DataFrame =
+    jdbcReader(spark, url, table, fetchSize).load()
 
   /** Range-partitioned external read: `numPartitions` concurrent
     * connections each scanning one stride of `partCol` — the shape a
@@ -816,14 +820,21 @@ object Tables {
                           partCol: String, lower: Long, upper: Long,
                           numPartitions: Int,
                           fetchSize: Int = 10000): DataFrame =
-    spark.read.format("jdbc")
-      .option("url", url).option("dbtable", table)
-      .option("driver", derbyDriver)
+    jdbcReader(spark, url, table, fetchSize)
       .option("partitionColumn", partCol)
       .option("lowerBound", lower).option("upperBound", upper)
       .option("numPartitions", numPartitions)
-      .option("fetchsize", fetchSize)
       .load()
+
+  /** One driver-side connection, closed however `f` ends: the
+    * loader's catalog probes and warehouse-side statements, never row
+    * traffic.
+    */
+  private def withConnection[T](url: String)(f: java.sql.Connection => T): T = {
+    Class.forName(derbyDriver)
+    val conn = java.sql.DriverManager.getConnection(url)
+    try f(conn) finally conn.close()
+  }
 
   /** The connection's current schema — where an unqualified DDL name
     * resolves. None on drivers predating JDBC 4.1 getSchema (callers
@@ -849,11 +860,8 @@ object Tables {
     * dialect's likeliest order, via targeted metadata lookups (never a
     * full catalog listing — a real warehouse has thousands of tables).
     */
-  def jdbcTableExists(url: String, table: String,
-                      driver: String = derbyDriver): Boolean = {
-    Class.forName(driver)
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
+  def jdbcTableExists(url: String, table: String): Boolean =
+    withConnection(url) { conn =>
       val meta = conn.getMetaData
       def variants(s: String) = Seq(s.toUpperCase, s.toLowerCase, s).distinct
       // scope the probe to ONE schema (round-13 verdict nit: a null
@@ -872,7 +880,7 @@ object Tables {
       // every table name here carries underscores, and Derby's
       // getSearchStringEscape is the EMPTY STRING (no escape exists) —
       // an unfiltered probe for tx_024 matches an existing txa024,
-      // routing a genuine first load into the append/CTAS arm
+      // routing a genuine first load into the merge arm
       // (round-13 advice). The literal name always appears in its own
       // over-matched result set, so the driver-agnostic fix is an
       // EXACT post-filter on TABLE_NAME/TABLE_SCHEM.
@@ -885,127 +893,53 @@ object Tables {
           } finally rs.close()
         }
       }
-    } finally conn.close()
-  }
+    }
 
-  /** ONE pass over a load batch: its row count and each key column's
-    * min/max envelope (interleaved lo/hi in key order; bounded driver
-    * state, 3 values per key). NULL-keyed rows are REJECTED loudly up
-    * front, before any write: keys are PK-like, and NULL never equals
-    * NULL, so a NULL key bypasses both the anti-join dedup and a
-    * MERGE's ON clause and lands again on every replay. Counting
-    * non-nulls also keeps an all-NULL first key from reading as an
-    * empty batch and silently dropping the other columns' rows.
+  /** Rejects a load batch with a NULL in any key column, loudly and
+    * before any write, in ONE aggregate pass (a non-null count per key
+    * against the row count): keys are PK-like, and NULL never equals
+    * NULL, so a NULL key bypasses the MERGE's ON clause and lands again
+    * on every replay. Counting non-nulls per key also keeps an
+    * all-NULL first key from reading as an empty batch.
     */
-  private def checkedKeyEnvelope(batch: DataFrame, keys: Seq[String],
-                                 loader: String): (Long, org.apache.spark.sql.Row) = {
-    val aggs = count(lit(1)).as("__n") +: keys.flatMap(k => Seq(
-      count(col(k)).as(s"__nk_$k"),
-      min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")))
-    val stats = batch.agg(aggs.head, aggs.tail: _*).head()
-    val n = stats.getLong(0)
+  private def requireNonNullKeys(batch: DataFrame, keys: Seq[String]): Unit = {
+    val stats = batch.agg(count(lit(1)), keys.map(k => count(col(k))): _*).head()
     keys.zipWithIndex.foreach { case (k, i) =>
-      require(stats.getLong(1 + 3 * i) == n,
-        s"$loader: key column '$k' has ${n - stats.getLong(1 + 3 * i)} " +
-          "NULL(s) — keys are PK-like; a NULL key never matches an " +
-          "existing row and would land again on every replay")
-    }
-    (n, org.apache.spark.sql.Row.fromSeq(
-      keys.indices.flatMap(i => Seq(stats.get(2 + 3 * i), stats.get(3 + 3 * i)))))
-  }
-
-  /** The bounded anti-join probe: the warehouse's key projection
-    * filtered to the batch's min/max envelope per key column
-    * (`boundsRow` = interleaved lo/hi in key order, the output of the
-    * caller's one-pass batch agg). The range predicates push INTO the
-    * external scan — plan-asserted in SourcesSpec A17c, the guarantee
-    * that per-batch probe cost rides the batch's key span instead of
-    * the warehouse's full history.
-    */
-  private[graft] def jdbcKeyProbe(spark: SparkSession, url: String,
-                                  table: String, keys: Seq[String],
-                                  boundsRow: org.apache.spark.sql.Row): DataFrame = {
-    val envelope = keys.zipWithIndex.map { case (k, i) =>
-      col(k) >= lit(boundsRow.get(2 * i)) && col(k) <= lit(boundsRow.get(2 * i + 1))
-    }.reduce(_ && _)
-    jdbcRead(spark, url, table).select(keys.map(col): _*).filter(envelope)
-  }
-
-  /** Retry-safe incremental JDBC load: first load CREATEs the typed
-    * table; later loads append ONLY the keys the warehouse does not
-    * already hold, so a crashed-and-replayed load — or the same batch
-    * landing twice from an orchestrator retry — is a per-key no-op:
-    * the refreshSetSimIndex idempotence recipe at the warehouse
-    * boundary. Insert-only by design: a re-landed key KEEPS its
-    * first-landed row here, which deliberately DIVERGES from the
-    * reference's staged MERGE loader
-    * (load_to_snowflake_transction.py's WHEN MATCHED THEN UPDATE
-    * re-lands changed rows); the reference's exact upsert shape is
-    * [[jdbcMergeLoad]], and the parquet-side equivalent is
-    * [[mergeIntoWarehouse]] — pick by whether the stream's keys are
-    * immutable facts (this loader) or mutable state (MERGE).
-    *
-    * Two scale/safety properties (both round-12 verdict items):
-    *  - the existence decision comes from [[jdbcTableExists]] (the
-    *    injectable `tableExists` seam — specs prove a transient probe
-    *    failure THROWS instead of routing to the overwrite arm);
-    *  - the anti-join probe is BOUNDED: the warehouse scan is filtered
-    *    to the batch's own per-key-column min/max envelope, and those
-    *    range predicates push INTO the external system's scan (the A17
-    *    pushdown machinery), so per-batch probe cost rides the batch's
-    *    key span, not O(total landed warehouse history) — the classic
-    *    grows-forever JDBC anti-join bottleneck.
-    */
-  def jdbcIncrementalLoad(spark: SparkSession, batch: DataFrame, url: String,
-                          table: String, keys: Seq[String],
-                          columnTypes: String = "",
-                          tableExists: (String, String) => Boolean =
-                            jdbcTableExists(_, _)): Unit = {
-    val (n, boundsRow) = checkedKeyEnvelope(batch, keys, "jdbcIncrementalLoad")
-    if (!tableExists(url, table) &&
-        jdbcCreateTyped(batch, url, table, columnTypes)) {
-      // first load CREATEd the typed table and landed the batch (an
-      // empty batch still lands the schema, so later loads take the
-      // probe arm). A create that finds the table already there — a
-      // peer's first load raced ours between probe and DDL — falls
-      // through to the anti-join arm below, which appends only the keys
-      // the peer has not landed (round-14 verdict: the old overwrite
-      // arm dropped the peer's table here).
-    } else if (n > 0) {
-      val existingKeys = jdbcKeyProbe(spark, url, table, keys, boundsRow)
-      jdbcWriter(batch.join(existingKeys, keys, "left_anti"), url, table)
-        .mode("append").save()
+      val nulls = stats.getLong(0) - stats.getLong(1 + i)
+      require(nulls == 0,
+        s"jdbcMergeLoad: key column '$k' has $nulls NULL(s) — keys are " +
+          "PK-like; a NULL key never matches an existing row and would " +
+          "land again on every replay")
     }
   }
 
-  /** A17d: the reference's ACTUAL loader shape — staged warehouse-side
+  /** A17d: the reference's loader shape — staged warehouse-side
     * MERGE upsert (load_to_snowflake_transction.py: CREATE IF NOT
     * EXISTS, batch-insert into a staging table, then
     * `MERGE ... WHEN MATCHED THEN UPDATE / WHEN NOT MATCHED THEN
-    * INSERT` on the key). Where [[jdbcIncrementalLoad]] is insert-only
-    * (first-landed row wins — immutable facts), this one UPDATES
-    * re-landed keys, matching the reference bit-for-bit in semantics.
+    * INSERT` on the key), so a re-landed key takes its new values.
     * Scale shape: the batch lands in the staging table through Spark's
     * batched JDBC writer (parallel partitions), and the dedup/upsert
     * work runs entirely WAREHOUSE-SIDE as one set-based MERGE — zero
-    * key history ever crosses the wire back to Spark, the strongest
-    * form of the round-12 "bound the per-batch anti-join" item.
+    * key history ever crosses the wire back to Spark.
     * Replay-idempotent: re-merging the same staged batch updates every
     * matched key to the values it already has. That holds only for
     * non-NULL keys (`ON t.k = s.k` never matches NULL), so NULL-keyed
-    * batches are rejected before either arm, as in
-    * [[jdbcIncrementalLoad]].
+    * batches are rejected before either arm.
+    *
+    * The existence decision comes from [[jdbcTableExists]], behind the
+    * injectable `tableExists` seam: specs prove a transient probe
+    * failure THROWS instead of routing to the create arm.
     */
   def jdbcMergeLoad(spark: SparkSession, batch: DataFrame, url: String,
                     table: String, keys: Seq[String],
                     columnTypes: String = "",
                     tableExists: (String, String) => Boolean =
                       jdbcTableExists(_, _)): Unit = {
-    checkedKeyEnvelope(batch, keys, "jdbcMergeLoad")
+    requireNonNullKeys(batch, keys)
     // create-or-fall-through (round-14 verdict): a first load that loses
     // the probe→create race to a peer merges its batch into the peer's
-    // table instead of overwriting it. The probe is the same injectable
-    // seam as jdbcIncrementalLoad's (transient failures THROW).
+    // table instead of overwriting it
     if (!tableExists(url, table) &&
         jdbcCreateTyped(batch, url, table, columnTypes)) return
     val stage = jdbcMergeStage(batch, url, table)
@@ -1083,10 +1017,8 @@ object Tables {
     */
   private[graft] def dropOrphanJdbcStages(url: String, table: String,
                                           maxAgeMs: Long = 60L * 60 * 1000,
-                                          nowMs: Long = System.currentTimeMillis()): Seq[String] = {
-    Class.forName(derbyDriver)
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
+                                          nowMs: Long = System.currentTimeMillis()): Seq[String] =
+    withConnection(url) { conn =>
       val meta = conn.getMetaData
       // scope the listing to ONE schema, like the existence probe
       // (round-14 advice: a null schemaPattern listed a same-prefix
@@ -1124,51 +1056,27 @@ object Tables {
       try stale.foreach(n => st.executeUpdate(s"DROP TABLE $n"))
       finally st.close()
       stale
-    } finally conn.close()
-  }
+    }
 
-  /** One statement-scoped connection (driver-side DDL/MERGE hops — the
+  /** One statement on one connection (driver-side DDL/MERGE hops — the
     * loader's warehouse-side statements, never row traffic).
     */
-  private[graft] def withJdbc[T](url: String)(f: java.sql.Statement => T): T = {
-    Class.forName(derbyDriver)
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
+  private[graft] def withJdbc[T](url: String)(f: java.sql.Statement => T): T =
+    withConnection(url) { conn =>
       val st = conn.createStatement()
       try f(st) finally st.close()
-    } finally conn.close()
-  }
+    }
 
-  /** A17b: the reference's actual topology closed end-to-end minus the
-    * broker — STREAM → external warehouse: each micro-batch lands
-    * through [[jdbcIncrementalLoad]], whose per-key anti-join makes a
-    * replayed batch (crash between sink write and checkpoint commit,
-    * or a full re-run from a fresh checkpoint) a warehouse no-op. The
-    * exactly-once unit here is the KEY, not the batch layout (a JDBC
-    * table has no partition subtree to overwrite) — the right
-    * mechanism for an insert-only external warehouse.
-    */
-  def jdbcStreamLoad(stream: DataFrame, url: String, table: String,
-                     keys: Seq[String], checkpoint: String,
-                     columnTypes: String = ""): org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        jdbcIncrementalLoad(batch.sparkSession, batch, url, table, keys,
-          columnTypes)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-
-  /** The UPDATE-semantics twin of [[jdbcStreamLoad]] (round-14 verdict
-    * item 6): each micro-batch lands through the staged warehouse-side
-    * MERGE, so a LATE-ARRIVING CORRECTION — the same key re-emitted
-    * with new values, the reference loader's WHEN MATCHED THEN UPDATE
-    * case — updates the warehouse row instead of being dropped by the
-    * insert-only anti-join. Exactly-once here is the MERGE's own
-    * algebra: a replayed micro-batch (crash between sink and checkpoint
-    * commit, or a full re-run from a fresh checkpoint) re-updates every
+  /** STREAM → external warehouse, the reference's topology closed
+    * end-to-end minus the broker: each micro-batch lands through
+    * [[jdbcMergeLoad]]'s staged warehouse-side MERGE, so a
+    * LATE-ARRIVING CORRECTION — the same key re-emitted with new
+    * values, the reference loader's WHEN MATCHED THEN UPDATE case —
+    * updates the warehouse row, and a cross-batch duplicate lands
+    * once. Exactly-once here is the MERGE's own algebra, keyed on the
+    * row (a JDBC table has no partition subtree to overwrite): a
+    * replayed micro-batch (crash between sink and checkpoint commit,
+    * or a full re-run from a fresh checkpoint) re-updates every
     * matched key to the values it already has — idempotent without any
     * key history crossing the wire back to Spark. Within one
     * micro-batch the MERGE sees each key once because the stream should
@@ -1178,15 +1086,13 @@ object Tables {
     */
   def jdbcMergeStreamLoad(stream: DataFrame, url: String, table: String,
                           keys: Seq[String], checkpoint: String,
-                          columnTypes: String = ""): org.apache.spark.sql.streaming.StreamingQuery =
+                          columnTypes: String = ""): StreamingQuery =
     stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        jdbcMergeLoad(batch.sparkSession, batch, url, table, keys,
-          columnTypes)
-        ()
+        jdbcMergeLoad(batch.sparkSession, batch, url, table, keys, columnTypes)
       }
       .option("checkpointLocation", checkpoint)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
 
   /** The reference's warehouse-load job (src/airflow/dags/
@@ -1201,11 +1107,9 @@ object Tables {
   def incrementalLoad(spark: SparkSession, sinkDir: String, warehouseDir: String,
                       keys: Seq[String], versionDesc: Seq[Column]): Unit = {
     val batch = readMergedSchema(spark, sinkDir)
-    // heal a crashed swap BEFORE the probe: otherwise the probe misses a
-    // table the heal then restores, and the merge meets an unaligned
-    // batch. Only the existence probe may fail soft; an alignment error
-    // must surface, not silently merge the unaligned batch
-    recoverCrashedSwap(spark, warehouseDir)
+    // the read heals a crashed swap before it probes, so a restored
+    // table is aligned to. Only the existence probe may fail soft; an
+    // alignment error must surface, not silently merge the unaligned batch
     val existing = readIfPresent(spark, warehouseDir)
     val aligned = existing.map(w => alignTo(batch, w.schema)).getOrElse(batch)
     mergeOnto(existing, aligned, warehouseDir, keys, versionDesc)

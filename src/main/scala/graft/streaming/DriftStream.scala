@@ -30,9 +30,11 @@ import graft.sources.Tables
   * (asserted in StreamingSpec H17).
   *
   * Scale: the exchange per batch carries ≤256 integer cells per
-  * partition; the state table grows one tiny partition per micro-batch
-  * and [[SketchStream.consolidateCells]]'s age-out applies unchanged if
-  * the monitor runs for months.
+  * partition; the state table grows one tiny partition per micro-batch,
+  * and no retention fold exists for it yet, so its `batch_id=`
+  * subtrees grow without bound. [[SketchStream.consolidateCells]]
+  * folds only count-min cells: it selects `(r, bucket, cnt)`, which a
+  * drift cell table does not have.
   */
 object DriftStream {
 
@@ -73,8 +75,7 @@ object DriftStream {
     */
   private def mergedTermCells(spark: SparkSession, cellsDir: String,
                               reference: DataFrame): DataFrame = {
-    Tables.recoverCrashedSwap(spark, cellsDir)
-    val incoming = spark.read.parquet(cellsDir)
+    val incoming = Tables.readLanded(spark, cellsDir)
       .groupBy(col("term")).agg(sum(col("cnt")).as("c1"))
     reference.select(col("term"), col("cnt").cast("long").as("c0"))
       .join(incoming, Seq("term"), "full_outer")
@@ -115,8 +116,7 @@ object DriftStream {
     */
   def psiFromDriftCells(spark: SparkSession, cellsDir: String,
                         reference: DataFrame): DataFrame = {
-    Tables.recoverCrashedSwap(spark, cellsDir)
-    val incoming = spark.read.parquet(cellsDir)
+    val incoming = Tables.readLanded(spark, cellsDir)
       .groupBy(col("bucket")).agg(sum(col("cnt")).as("c1"))
     val ref = reference.select(col("bucket"), col("cnt").as("c0"))
     Fraud.psiFromCells(

@@ -136,9 +136,11 @@ object FraudStream {
     *
     * Scale: the exchange per batch carries one cell per (window, user)
     * touched by the batch — partial-aggregated map-side; the state table
-    * grows one tiny partition per micro-batch, and
-    * [[SketchStream.consolidateCells]]'s age-out pattern applies (fold
-    * aged batches by the same decimal/long addition serving performs).
+    * grows one tiny partition per micro-batch, and no retention fold
+    * exists for it yet, so its `batch_id=` subtrees grow without
+    * bound. [[SketchStream.consolidateCells]] folds only count-min
+    * cells: it selects `(r, bucket, cnt)`, which a spend-trend cell
+    * table does not have.
     */
   def maintainSpendTrendCells(events: DataFrame, cellsDir: String,
                               checkpoint: String): StreamingQuery =
@@ -157,8 +159,7 @@ object FraudStream {
     * same terminal double cast.
     */
   def spendTrendFromCells(spark: SparkSession, cellsDir: String): DataFrame = {
-    Tables.recoverCrashedSwap(spark, cellsDir)
-    spark.read.parquet(cellsDir)
+    Tables.readLanded(spark, cellsDir)
       .groupBy(col("ws"), col("we"), col("user_id"))
       .agg(sum(col("dec_sum")).as("dec_total"),
            sum(col("n_events")).as("num_events"))

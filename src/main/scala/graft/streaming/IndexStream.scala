@@ -71,26 +71,22 @@ object IndexStream {
   /** Fold the accumulated delta into the base layout — the A13
     * small-file compaction applied to the index: base ∪ delta (latest
     * row per vec_id — see [[dedupPreferDelta]]) rewritten as one
-    * `cell=`-partitioned table through the SHARED staging-swap
-    * discipline (`Tables.stagingSwap`): the new layout is complete in a
+    * `cell=`-partitioned table through the SHARED staging swap
+    * (`Tables.replaceTable`): the new layout is complete in a
     * sibling staging dir before the live tree is touched, the swap is a
     * metadata-only rename with its result CHECKED, and a crash in the
-    * delete-to-rename window is healed by `Tables.recoverCrashedSwap`
-    * on the next compact/probe (round-6 advice — the hand-rolled
+    * delete-to-rename window is healed by the next compact or probe's
+    * read (round-6 advice — the hand-rolled
     * delete-then-rename here was the one swap sink outside that
     * discipline). Probes before and after serve identical results
     * (spec'd bit-exact); run it when delta file counts start to
     * dominate probe I/O — the same trigger A13 uses.
     */
   def compactIndexDelta(spark: SparkSession, dir: String): Unit = {
-    Tables.recoverCrashedSwap(spark, s"$dir/vectors")
-    val base = spark.read.parquet(s"$dir/vectors")
+    val base = Tables.readLanded(spark, s"$dir/vectors")
     val delta = Tables.readIfPresent(spark, s"$dir/delta")
     if (delta.isEmpty) return
-    Tables.stagingSwap(spark, s"$dir/vectors") { staging =>
-      dedupPreferDelta(base, delta)
-        .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    }
+    Tables.replaceTable(dedupPreferDelta(base, delta), s"$dir/vectors", Seq("cell"))
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/delta"), true)
@@ -110,12 +106,11 @@ object IndexStream {
     */
   def probeMaintained(spark: SparkSession, dir: String, qVec: Array[Float],
                       k: Int, nProbes: Int = 2): DataFrame = {
-    Tables.recoverCrashedSwap(spark, s"$dir/vectors")
     val cents = Similarity.readCentroids(spark, dir)
     val qNrm = math.sqrt(qVec.map(x => x.toDouble * x.toDouble).sum)
     require(qNrm > 0, "query vector has zero norm")
     val probeCells = Similarity.probeCellsFor(cents, qVec, qNrm, nProbes)
-    val base = spark.read.parquet(s"$dir/vectors")
+    val base = Tables.readLanded(spark, s"$dir/vectors")
     val delta = Tables.readIfPresent(spark, s"$dir/delta")
     dedupPreferDelta(
       base.filter(col("cell").isin(probeCells: _*)),

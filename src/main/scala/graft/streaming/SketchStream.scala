@@ -49,10 +49,7 @@ object SketchStream {
     */
   def heavyHittersFromCells(keyed: DataFrame, cellsDir: String,
                             keyCol: String, threshold: Long): DataFrame = {
-    // self-heal a consolidation crash before reading (same pattern as
-    // every other staged-swap table consumer)
-    Tables.recoverCrashedSwap(keyed.sparkSession, cellsDir)
-    val merged = keyed.sparkSession.read.parquet(cellsDir)
+    val merged = Tables.readLanded(keyed.sparkSession, cellsDir)
       .groupBy(col("r"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
     Relational.cmsThresholdEstimate(keyed, merged, keyCol, threshold)
@@ -93,8 +90,7 @@ object SketchStream {
   def windowDistinctFromCells(spark: org.apache.spark.sql.SparkSession,
                               cellsDir: String,
                               windowDays: Int = 60): DataFrame = {
-    Tables.recoverCrashedSwap(spark, cellsDir)
-    val merged = spark.read.parquet(cellsDir)
+    val merged = Tables.readLanded(spark, cellsDir)
       .groupBy(col("ship_day"), col("bucket"))
       .agg(max(col("rho")).as("rho"))
     Relational.windowHllFromCells(merged, windowDays)
@@ -135,8 +131,7 @@ object SketchStream {
   def windowQuantilesFromCells(spark: org.apache.spark.sql.SparkSession,
                                cellsDir: String, lo: Double, hi: Double,
                                windowDays: Int = 60): DataFrame = {
-    Tables.recoverCrashedSwap(spark, cellsDir)
-    val merged = spark.read.parquet(cellsDir)
+    val merged = Tables.readLanded(spark, cellsDir)
       .groupBy(col("ship_day"), col("bucket"))
       .agg(sum(col("cnt")).as("cnt"))
     val stats = spark.range(1).select(lit(lo).as("lo"), lit(hi).as("hi"))
@@ -172,8 +167,7 @@ object SketchStream {
   def sampleFromCells(spark: org.apache.spark.sql.SparkSession,
                       cellsDir: String, k: Int,
                       idCol: String = "doc_id"): DataFrame = {
-    Tables.recoverCrashedSwap(spark, cellsDir)
-    spark.read.parquet(cellsDir)
+    Tables.readLanded(spark, cellsDir)
       .select(col(idCol), col("source"), col("hk"))
       .distinct()
       .orderBy(col("hk"), col(idCol))
@@ -207,14 +201,8 @@ object SketchStream {
                        cellsDir: String, keepLast: Int = 4): Unit = {
     require(keepLast >= 1, s"keepLast must be >= 1 (got $keepLast): the newest " +
       "batch is the crash-replay surface and must stay unconsolidated")
-    // heal a crash in a PREVIOUS consolidation's rename window first —
-    // without this, the read below throws (table dir missing, the only
-    // copy stranded in staging) or, if the maintenance stream recreated
-    // the dir meanwhile, the swap's staging cleanup would destroy the
-    // stranded pre-crash counts
-    Tables.recoverCrashedSwap(spark, cellsDir)
     // partition-path values read back as int when they fit; pin to long
-    val cells = spark.read.parquet(cellsDir)
+    val cells = Tables.readLanded(spark, cellsDir)
       .withColumn("batch_id", col("batch_id").cast("long"))
     val maxRow = cells.filter(col("batch_id") >= 0)
       .agg(max(col("batch_id")).as("m")).head()

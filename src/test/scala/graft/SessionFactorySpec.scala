@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * no operator or stream touches that conf: a setting made inside one
   * would change every concurrent query on the shared session. Nothing
   * under src/main clones the session either, only `Tables` spells
-  * the exactly-once `batch_id` sink, and only `Stateful`'s shared fold
-  * spells the per-user event-order sort.
+  * the exactly-once `batch_id` sink or touches a swapped table's heal
+  * and swap, and only `Stateful`'s shared fold spells the per-user
+  * event-order sort.
   *
   * No Spark session: source walks, cheap enough for every `sbt test`.
   */
@@ -64,6 +65,21 @@ class SessionFactorySpec extends AnyFunSuite {
     val copies = scalaSources(root).filter(p => p != sink && spellsSink(p))
     assert(copies.isEmpty,
       s"hand-copied exactly-once sinks (use Tables.landBatch): ${copies.mkString(", ")}")
+  }
+
+  test("recoverCrashedSwap and stagingSwap appear in no main source but Tables.scala") {
+    val tables = root.resolve("graft/sources/Tables.scala")
+    // a call, not a doc mention: whitespace-tolerant up to the paren
+    val swapCall = """\b(?:recoverCrashedSwap|stagingSwap)\s*\(""".r
+    def calls(p: Path): Boolean = swapCall.findFirstIn(read(p)).isDefined
+    assert(calls(tables), s"$tables no longer heals swapped tables — the walk is looking elsewhere")
+    // a hand-placed heal is the step a caller can put in the wrong
+    // order; Tables' reads (readIfPresent, readLanded) and replaceTable
+    // heal first whoever calls them
+    val copies = scalaSources(root).filter(p => p != tables && calls(p))
+    assert(copies.isEmpty,
+      s"hand-placed crash heals or swaps (read through Tables.readLanded / " +
+        s"readIfPresent, replace through Tables.replaceTable): ${copies.mkString(", ")}")
   }
 
   test("the full-precision event-order sort is spelled in Stateful's shared fold alone") {
