@@ -577,6 +577,38 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
     assert(Tables.jdbcRead(spark, url, table).count() === 2)
   }
 
+  test("A17c a transient existence-probe failure fails the load LOUDLY — it can never clobber the warehouse") {
+    import spark.implicits._
+    // round-12 advice defect: the old probe was `try read catch { _ =>
+    // absent }`, so a connection reset on an EXISTING table routed to
+    // the create arm and silently recreated it with only the current
+    // batch. The probe is now an injectable seam backed by
+    // jdbcTableExists (catalog metadata, exceptions propagate).
+    System.setProperty("derby.system.home", tmpDir("graft_derby_home3"))
+    val url = Tables.jdbcUrl(tmpDir("graft_derby3") + "/wh")
+    val batch1 = Seq(("t1", 10.5), ("t2", 20.0)).toDF("transaction_id", "amount")
+    Tables.jdbcMergeLoad(spark, batch1, url, "tx_guard",
+      Seq("transaction_id"), "transaction_id VARCHAR(64)")
+    assert(Tables.jdbcRead(spark, url, "tx_guard").count() === 2)
+    // simulated transient failure (connection reset / lock timeout /
+    // auth hiccup) while the table EXISTS: the load must throw, and the
+    // landed data must be byte-for-byte intact
+    val boom = intercept[RuntimeException] {
+      Tables.jdbcMergeLoad(spark,
+        Seq(("t9", 99.0)).toDF("transaction_id", "amount"), url, "tx_guard",
+        Seq("transaction_id"),
+        tableExists = (_, _) => throw new RuntimeException("connection reset"))
+    }
+    assert(boom.getMessage === "connection reset")
+    val rows = Tables.jdbcRead(spark, url, "tx_guard").collect()
+      .map(r => r.getAs[String]("transaction_id") -> r.getAs[Double]("amount")).toMap
+    assert(rows === Map("t1" -> 10.5, "t2" -> 20.0),
+      "a failed probe must leave the warehouse untouched")
+    // the real probe: explicit catalog answer, both polarities
+    assert(Tables.jdbcTableExists(url, "tx_guard"))
+    assert(!Tables.jdbcTableExists(url, "tx_no_such_table"))
+  }
+
   test("A17h a DELAYED first load can never clobber a peer's landed table: create-or-fall-through") {
     import spark.implicits._
     // round-14 verdict defect: the first-load arm wrote mode("overwrite")
@@ -597,18 +629,12 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
       Seq(("m2", 30.0), ("mshared", 99.0)).toDF("transaction_id", "amount"),
       url, "tx_firstmerge", Seq("transaction_id"),
       tableExists = (_, _) => false) // stale probe: absent, though the peer landed
-    def landed(): Map[String, Double] =
-      Tables.jdbcRead(spark, url, "tx_firstmerge").collect()
-        .map(r => r.getAs[String]("transaction_id") -> r.getAs[Double]("amount")).toMap
-    val merged = Map("m1" -> 1.0, "mshared" -> 99.0, "m2" -> 30.0)
-    assert(landed() === merged,
+    val merged = Tables.jdbcRead(spark, url, "tx_firstmerge").collect()
+      .map(r => r.getAs[String]("transaction_id") -> r.getAs[Double]("amount")).toMap
+    assert(merged === Map("m1" -> 1.0, "mshared" -> 99.0, "m2" -> 30.0),
       "a raced first MERGE load must merge into the peer's table, not overwrite it")
-    // round-12 advice defect: the old probe was `try read catch { _ =>
-    // absent }`, so a connection reset on an EXISTING table routed to
-    // mode("overwrite") and silently recreated it with only the current
-    // batch. A transient probe failure (connection reset / lock timeout
-    // / auth hiccup) must THROW through the injectable seam, never be
-    // absorbed into the create arm, and leave the landed rows intact
+    // and a transient probe failure still THROWS through the merge
+    // loader's seam (never absorbed into the create arm)
     val boom = intercept[RuntimeException] {
       Tables.jdbcMergeLoad(spark,
         Seq(("m9", 9.0)).toDF("transaction_id", "amount"),
@@ -618,11 +644,6 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
     assert(boom.getMessage === "connection reset")
     assert(Tables.jdbcRead(spark, url, "tx_firstmerge").count() === 3,
       "a failed probe must leave the warehouse untouched")
-    assert(landed() === merged, "a failed probe must leave the landed values intact")
-    // the real probe (jdbcTableExists: catalog metadata, exceptions
-    // propagate): an explicit answer, both polarities
-    assert(Tables.jdbcTableExists(url, "tx_firstmerge"))
-    assert(!Tables.jdbcTableExists(url, "tx_no_such_table"))
   }
 
   test("A17i stream -> JDBC warehouse MERGE leg: a late correction UPDATEs, replay lands exactly once") {
