@@ -721,17 +721,9 @@ object Dedup {
     */
   def buildSetSimIndex(base: DataFrame, name: String, buckets: Int = 8,
                        tNum: Int = 7, tDen: Int = 10): Unit = {
-    val spark = base.sparkSession
-    // DROP TABLE only clears this session's catalog; a directory
-    // orphaned by a previous process survives it and the saveAsTable
-    // below would refuse the non-empty location (§6b round 3) — delete
-    // the physical paths too so rebuilds are self-cleaning
-    for (suffix <- Seq("_pref", "_sh", "_df")) {
-      spark.sql(s"DROP TABLE IF EXISTS $name$suffix")
-      val p = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), s"$name$suffix")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    }
+    // rebuilds are self-cleaning, orphaned warehouse dirs included
+    for (suffix <- Seq("_pref", "_sh", "_df"))
+      Tables.dropManagedTable(base.sparkSession, s"$name$suffix")
     val sh = Stage.checkpointFresh(setSimShingles(base))
     val dfTab = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
     Tables.writeBucketed(
@@ -1347,13 +1339,8 @@ object Dedup {
     * re-sketched or re-shuffled.
     */
   def buildBandIndex(base: DataFrame, name: String, buckets: Int = 8): Unit = {
-    val spark = base.sparkSession
-    // DROP TABLE only clears the catalog; delete the physical path too
-    // (§6b round 3) so rebuilds are self-cleaning
-    spark.sql(s"DROP TABLE IF EXISTS ${name}_bands")
-    val p = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), s"${name}_bands")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+    // rebuilds are self-cleaning, orphaned warehouse dirs included
+    Tables.dropManagedTable(base.sparkSession, s"${name}_bands")
     Tables.writeBucketed(bandKeyed(base), s"${name}_bands", "bkey", buckets)
   }
 

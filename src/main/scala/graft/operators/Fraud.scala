@@ -214,16 +214,23 @@ object Fraud {
         when(col("amount") > HighValueThreshold, 1).otherwise(0))
       .withColumn("fraud_score",
         col("country_mismatch") * 0.5 + col("high_value_flag") * 0.5)
-      .withColumn("discounted_price",
-        when(col("base_price").isNotNull && col("discount").isNotNull,
-          col("base_price") * (lit(1.0) - col("discount"))).otherwise(lit(null)))
+      .withColumn("discounted_price", discountedPrice)
+
+  /** The reference's discounted_price: NULL unless both inputs are set. */
+  private def discountedPrice: Column =
+    when(col("base_price").isNotNull && col("discount").isNotNull,
+      col("base_price") * (lit(1.0) - col("discount"))).otherwise(lit(null))
+
+  /** The scored projection's 11 columns, shared by c1/c5 and c17. */
+  private def scoredColumns(scored: DataFrame): DataFrame =
+    scored.select("transaction_id", "user_id", "product_id", "amount",
+      "user_country", "product_country", "category",
+      "country_mismatch", "high_value_flag", "fraud_score", "discounted_price")
 
   /** Full scored enrichment — the pipeline's flagship projection. */
   def scoredTransactions(s: SparkSession, d: String): DataFrame =
-    score(enrich(transactions(s, d), users(s, d), products(s, d), supplierCountries(s, d)))
-      .select("transaction_id", "user_id", "product_id", "amount",
-        "user_country", "product_country", "category",
-        "country_mismatch", "high_value_flag", "fraud_score", "discounted_price")
+    scoredColumns(score(
+      enrich(transactions(s, d), users(s, d), products(s, d), supplierCountries(s, d))))
 
   /** C17: rules as DATA — the reference's hardcoded scoring predicates
     * (score() above) driven from a rule TABLE (rule_id, kind, threshold,
@@ -1072,15 +1079,10 @@ object Fraud {
     // compiled into the identical shuffle-free projection; hash-matches
     // c1's oracle (rule-table ≡ hardcoded equivalence, checked exactly).
     "c17_rule_table_score" -> ((s, d) =>
-      ruleTableScore(
+      scoredColumns(ruleTableScore(
         enrich(transactions(s, d), users(s, d), products(s, d), supplierCountries(s, d)),
         referenceRules(s))
-        .withColumn("discounted_price",
-          when(col("base_price").isNotNull && col("discount").isNotNull,
-            col("base_price") * (lit(1.0) - col("discount"))).otherwise(lit(null)))
-        .select("transaction_id", "user_id", "product_id", "amount",
-          "user_country", "product_country", "category",
-          "country_mismatch", "high_value_flag", "fraud_score", "discounted_price")),
+        .withColumn("discounted_price", discountedPrice))),
 
     // C6: per-user spend trend, tumbling 1-hour event-time windows
     // (reference: 1-minute windows over the live stream; the batch twin

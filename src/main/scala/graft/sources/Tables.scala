@@ -390,6 +390,18 @@ object Tables {
       .format("parquet")
       .saveAsTable(tableName)
 
+  /** Drop a managed table: its catalog entry AND its directory under
+    * `spark.sql.warehouse.dir`. `DROP TABLE IF EXISTS` alone leaves a
+    * directory a previous process orphaned (no catalog entry survives
+    * the process), and the next `saveAsTable` refuses the non-empty
+    * location.
+    */
+  def dropManagedTable(spark: SparkSession, name: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    val p = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  }
+
   /** CDC changelog apply: compact an insert/update/delete change stream
     * to final state — the newest change per key wins and a trailing
     * delete removes the key entirely (MERGE ... WHEN MATCHED AND op='D'

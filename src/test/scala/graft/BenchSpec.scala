@@ -245,4 +245,62 @@ class BenchSpec extends AnyFunSuite {
     // an unlistable dir degrades to the sentinel instead of throwing
     assert(Bench.corpusFingerprint(spark, s"$dir/no_such_subdir") === "unreadable")
   }
+
+  test("study scaffold: a body that throws reads -1 on every declared name and leaves no scratch dir") {
+    import Bench.Metric
+    val declared = Bench.secs("s_cost") ++ Bench.units("s_scan_mb") ++ Bench.secs("s_scan")
+    var seen = ""
+    val out = Bench.study("benchspec_throws", declared) { dir =>
+      seen = dir
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "written"))
+      // an in-run answer check fails the same way
+      require(1 == 2, "answers disagree")
+      Seq(Metric("s_cost", 1.0))
+    }
+    assert(out === Seq(Metric("s_cost", -1.0), Metric("s_scan_mb", -1.0, seconds = false),
+      Metric("s_scan", -1.0)))
+    assert(seen === Bench.scratchDir("benchspec_throws").getPath)
+    assert(!new java.io.File(seen).exists, "a failed study must not leave its scratch dir")
+  }
+
+  test("study scaffold: a body that succeeds reads in declared shape and leaves no scratch dir") {
+    import Bench.Metric
+    val declared = Bench.secs("s_cost") ++ Bench.units("s_scan_mb") ++ Bench.secs("s_scan")
+    val out = Bench.study("benchspec_ok", declared) { dir =>
+      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir, "written"))
+      // the body reports by name; the declaration owns the seconds flag
+      // and a name the body did not reach reads -1
+      Seq(Metric("s_scan_mb", 2.5), Metric("s_cost", 1.0))
+    }
+    assert(out === Seq(Metric("s_cost", 1.0), Metric("s_scan_mb", 2.5, seconds = false),
+      Metric("s_scan", -1.0)))
+    assert(!Bench.scratchDir("benchspec_ok").exists, "a study must not leave its scratch dir")
+    // an undeclared name is a study bug: the whole study reads -1
+    assert(Bench.study("benchspec_undeclared", Bench.secs("s_a"))(_ =>
+      Seq(Metric("s_a", 1.0), Metric("s_b", 1.0))) === Seq(Metric("s_a", -1.0)))
+  }
+
+  test("study scaffold: a stale scratch dir from an earlier run is cleared before the body runs") {
+    val dir = Bench.scratchDir("benchspec_stale")
+    java.nio.file.Files.createDirectories(dir.toPath.resolve("from_a_killed_run"))
+    assert(dir.exists)
+    val out = Bench.study("benchspec_stale", Bench.units("s_stale")) { d =>
+      Seq(Bench.Metric("s_stale", if (new java.io.File(d).exists) 1.0 else 0.0))
+    }
+    assert(out === Seq(Bench.Metric("s_stale", 0.0, seconds = false)))
+    assert(!dir.exists)
+  }
+
+  test("min-of-n ignores a failed rep and reads -1 only when every rep fails") {
+    assert(Bench.minOf(3)(i => Seq(2.0, -1.0, 1.5)(i - 1)) === 1.5)
+    assert(Bench.minOf(2)(i => if (i == 1) -1.0 else 0.75) === 0.75)
+    assert(Bench.minOf(4)(_ => -1.0) === -1.0)
+    // every rep runs, numbered from 1 (a rep may key its own checkpoint)
+    val reps = scala.collection.mutable.ArrayBuffer.empty[Int]
+    Bench.minOf(4) { i => reps += i; 1.0 }
+    assert(reps.toSeq === Seq(1, 2, 3, 4))
+    // the timer behind every rep: a throw reads -1 under its label
+    assert(Bench.time("t_fails")(throw new IllegalStateException("x")) ===
+      Bench.Metric("t_fails", -1.0))
+  }
 }

@@ -120,6 +120,25 @@ class BucketingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("buildBandIndex succeeds over a warehouse dir a previous process left behind") {
+    import graft.operators.Dedup
+    val table = "graft_bidx_orphan_bands"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    // what a killed process leaves: files under the warehouse dir, no
+    // catalog entry (the catalog dies with the process) — saveAsTable
+    // refuses such a non-empty location unless the build deletes it
+    val dir = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), table)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stale = fs.create(new org.apache.hadoop.fs.Path(dir, "part-00000-stale.parquet"))
+    try stale.write("left by a previous process".getBytes) finally stale.close()
+    assert(!spark.catalog.tableExists(table) && fs.exists(dir))
+    val docs = Tables.table(spark, SF, "documents")
+    try {
+      Dedup.buildBandIndex(docs, "graft_bidx_orphan", buckets = 8)
+      assert(spark.table(table).count() === Dedup.bandKeyed(docs).count())
+    } finally Tables.dropManagedTable(spark, table)
+  }
+
   test("D23b production shape: persisted on-disk index makes the delta join one-sided, base never re-shingled") {
     import graft.operators.Dedup
     val docs = Tables.table(spark, SF, "documents")
