@@ -304,41 +304,58 @@ object Tables {
 
   /** Date-partitioned parquet sink (reference: src/spark/jobs/spark.py
     * fraud sink partitioned by payment_method/tx_year/tx_month/tx_day)
-    * for foreachBatch, landed exactly-once by [[landBatch]]: the
-    * micro-batch id leads the reference's partition columns, so a
-    * replayed batch replaces its own subtree. `readPartitioned` still
-    * prunes on all partition columns.
+    * for foreachBatch, landed exactly-once by [[landBatch]]: each
+    * micro-batch is its own `batch_id=N/` subtree holding the
+    * reference's partition columns, so a replayed batch replaces that
+    * subtree. `readPartitioned` still prunes on all partition columns,
+    * `batch_id` leading.
     */
   def writeDatePartitionedExactlyOnce(df: DataFrame, tsCol: String, path: String,
                                       batchId: Long,
                                       extraPartitionCols: Seq[String] = Seq("payment_method")): Unit =
     landBatch(withDateParts(df, tsCol), path, batchId, extraPartitionCols ++ dateParts)
 
-  /** The exactly-once batch sink: `batch_id` is the leading partition
-    * column and the write is a per-write DYNAMIC partition overwrite,
-    * so replaying batch N (a crash between the sink write and the
-    * checkpoint commit) replaces exactly its `batch_id=N/` subtree
-    * instead of appending duplicates. With a replayable source this is
-    * end-to-end exactly-once by layout, not by fencing. The overwrite
-    * mode is an option of this write, never a session conf, so no
-    * concurrent write on the shared session inherits it.
+  /** The exactly-once batch sink: batch N is a plain overwrite of its
+    * own subtree `dir/batch_id=N/`, partitioned by `partitionCols`
+    * beneath it, so replaying batch N (a crash between the sink write
+    * and the checkpoint commit) deletes and rewrites that whole subtree
+    * instead of appending duplicates, even where the replay no longer
+    * reaches a leaf the first attempt wrote. With a replayable source
+    * this is end-to-end exactly-once by layout, not by fencing. Readers
+    * of `dir` infer `batch_id` as the leading partition column.
     *
-    * Distribution is Spark's REBALANCE hint on the partition columns.
-    * On a small batch AQE lays it out as `repartition` on the same
-    * columns would: one file per leaf per task. A batch that
-    * concentrates in one leaf (a constant `batch_id`, one day of one
-    * payment method) is split at the advisory partition size across
-    * tasks instead of funnelled through one.
+    * The overwrite deletes the subtree before its job runs. So while a
+    * replay writes, and after a failed replay until it is retried,
+    * readers of `dir` see batch N as absent, not as its first rows.
+    *
+    * The batch id lives in the path alone, never in the plan: a literal
+    * column would be inlined into the generated code, so every trigger
+    * would compile its write stages again. A warm trigger compiles
+    * nothing. The subtree holds data files only (no `_SUCCESS` marker).
+    *
+    * Distribution is Spark's REBALANCE hint on a constant key and the
+    * partition columns. The constant key is there for a table without
+    * partition columns: a REBALANCE on no columns is round-robin, which
+    * sorts every row first. It is the same on every trigger, so it
+    * compiles once, and it groups rows as the partition columns alone
+    * would. On a small batch AQE lays it out as `repartition` on the
+    * same columns would: one file per leaf per task. A batch that
+    * concentrates in one leaf (one day of one payment method) is split
+    * at the advisory partition size across tasks instead of funnelled
+    * through one.
+    *
+    * An empty batch leaves an empty `batch_id=N/` directory, or, with
+    * no partition columns, one zero-row file that carries the schema:
+    * either reads as no rows.
     */
   def landBatch(df: DataFrame, dir: String, batchId: Long,
                 partitionCols: Seq[String] = Nil): Unit = {
-    val parts = "batch_id" +: partitionCols
-    df.withColumn("batch_id", lit(batchId))
-      .hint("rebalance", parts.map(col): _*)
+    val key = "__graft_land_key"
+    df.withColumn(key, lit(0)).hint("rebalance", (key +: partitionCols).map(col): _*).drop(key)
       .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(parts: _*)
-      .parquet(dir)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy(partitionCols: _*)
+      .parquet(new org.apache.hadoop.fs.Path(dir, s"batch_id=$batchId").toString)
   }
 
   /** Run `stream` into [[landBatch]] at `dir`: each micro-batch lands

@@ -18,10 +18,10 @@ import graft.sources.Tables
   * micro-batch must bucket identically), via [[Fraud.driftBucket]], the
   * same expression the batch statistics compile.
   *
-  * Exactly-once by LAYOUT (H12's contract): each micro-batch writes its
-  * own per-bucket counts under `batch_id=<id>` with dynamic partition
-  * overwrite, so a crash-replayed batch replaces its own subtree rather
-  * than double-counting. Serving merges cells with an integer sum —
+  * Exactly-once by LAYOUT (H12's contract): each micro-batch overwrites
+  * its own `batch_id=<id>` subtree with its per-bucket counts, so a
+  * crash-replayed batch replaces that subtree rather than
+  * double-counting. Serving merges cells with an integer sum —
   * associative, commutative — so the served grid equals the one-shot
   * batch histogram over the same rows bit-for-bit, whatever the
   * batching; and because the PSI is then computed by the SHARED

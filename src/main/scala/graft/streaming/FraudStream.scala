@@ -119,9 +119,9 @@ object FraudStream {
     * to the windowed trend the reference sinks in complete mode,
     * spark.py:171-200 — re-expressed so nothing is ever rewritten).
     *
-    * Each micro-batch lands per-(hour-window, user) PARTIAL cells under
-    * `batch_id=<id>` with dynamic partition overwrite (exactly-once by
-    * layout: a crash-replayed batch replaces its own subtree). A cell
+    * Each micro-batch overwrites its own `batch_id=<id>` subtree with
+    * per-(hour-window, user) PARTIAL cells (exactly-once by layout: a
+    * crash-replayed batch replaces its own subtree). A cell
     * holds the batch's exact DECIMAL(18,6) spend sum — decimal addition
     * is associative/commutative, so serving folds partials into the same
     * exact total the one-shot batch aggregate computes, whatever the

@@ -126,9 +126,9 @@ object IndexStream {
     * [[maintainIvfIndex]]: documents arriving on a stream are banded
     * per micro-batch (the SAME `Dedup.bandKeyed` expressions the batch
     * index build uses — the H12 shared-arithmetic rule) and landed
-    * under `dir` partitioned by `batch_id` with dynamic partition
-    * overwrite, so a replayed micro-batch replaces exactly its own
-    * subtree: the delta is exactly-once BY LAYOUT. This is what makes
+    * under `dir`, each micro-batch as an overwrite of its own
+    * `batch_id=<id>` subtree, so a replayed micro-batch replaces
+    * exactly that subtree: the delta is exactly-once BY LAYOUT. This is what makes
     * streamed dedup-index maintenance sound where a managed-table
     * append is not (a replayed append would double band rows; see
     * PLANS round 11 — the set-sim index keeps the batch-refresh path

@@ -13,9 +13,9 @@ import graft.sources.Tables
   *
   * Exactly-once by LAYOUT, not by fencing: each micro-batch sketches its
   * own rows ([[Relational.cmsCells]] — one digest per row, partial agg)
-  * and writes them under `batch_id=<id>` with a DYNAMIC partition
-  * overwrite, so a replayed batch (crash between sink write and
-  * checkpoint commit) replaces its own subtree instead of double-adding
+  * and overwrites its own `batch_id=<id>` subtree with them, so a
+  * replayed batch (crash between sink write and checkpoint commit)
+  * replaces that subtree instead of double-adding
   * — the additive analogue of the A6b exactly-once sink. Serving merges
   * cells across batch partitions with an integer sum, which is
   * associative and commutative, so the served sketch is BIT-IDENTICAL
@@ -63,7 +63,7 @@ object SketchStream {
     * Same exactly-once-by-layout sink as [[maintainCms]], with one
     * strictly stronger property: register max is IDEMPOTENT, not just
     * associative+commutative, so even a batch that double-lands its
-    * cells (the failure dynamic overwrite exists to fence) could not
+    * cells (the failure the subtree overwrite exists to fence) could not
     * change a served value — the layout discipline is kept for
     * uniformity, but the algebra no longer depends on it. Serving
     * merges cells across batch partitions by (day, bucket) max and
@@ -152,7 +152,7 @@ object SketchStream {
     *
     * Algebra note (the h33/h34 taxonomy): bottom-k union is idempotent
     * UNDER DEDUP BY ID — serving dedups (id) defensively, so even a
-    * double-landed replay (which the dynamic overwrite already fences)
+    * double-landed replay (which the subtree overwrite already fences)
     * could not push a legitimate row out of the cut with a duplicate.
     */
   def maintainSampleCells(stream: DataFrame, k: Int, cellsDir: String,
@@ -186,8 +186,8 @@ object SketchStream {
     *
     * The newest `keepLast` batches stay physically untouched because
     * they are the replay surface: after a crash the stream re-runs only
-    * its newest uncommitted batch, whose dynamic-partition overwrite
-    * must land on that batch's OWN subtree — folding it away would turn
+    * its newest uncommitted batch, whose subtree overwrite must land
+    * on that batch's OWN subtree — folding it away would turn
     * the replay's overwrite into a double-add. Any `keepLast >= 1`
     * therefore preserves exactly-once; larger values just keep more
     * recent batches individually inspectable.

@@ -13,9 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * no main source touches that conf: a setting made inside one would
   * change every concurrent query on the shared session. Nothing
   * under src/main clones the session either, only `Tables` spells
-  * the exactly-once `batch_id` sink or touches a swapped table's heal
-  * and swap, and only `Stateful`'s shared fold spells the per-user
-  * event-order sort.
+  * the exactly-once sink's `batch_id=<id>` subtree path or touches a
+  * swapped table's heal and swap, and only `Stateful`'s shared fold
+  * spells the per-user event-order sort.
   *
   * No Spark session: source walks, cheap enough for every `sbt test`.
   */
@@ -59,15 +59,23 @@ class SessionFactorySpec extends AnyFunSuite {
     // session's conf map, and nothing in the engine needs a second one
     val cloners = scalaSources(root).filter(p => read(p).contains("cloneSession"))
     assert(cloners.isEmpty, s"session cloned in: ${cloners.mkString(", ")}")
-    // one exactly-once sink: the batch_id dynamic-overwrite layout is
-    // spelled in Tables alone (landBatch), never hand-copied into a stream
+    // one exactly-once sink: the batch's `batch_id=<id>` subtree path is
+    // spelled in Tables alone (landBatch), never hand-copied into a
+    // stream; an interpolated id, not a doc's `batch_id=<id>` or `=N`
     val sink = root.resolve("graft/sources/Tables.scala")
-    val sinkLayout = """partitionOverwriteMode|partitionBy\("batch_id"""".r
-    def spellsSink(p: Path): Boolean = sinkLayout.findFirstIn(read(p)).isDefined
+    val subtreePath = """batch_id=\$""".r
+    def spellsSink(p: Path): Boolean = subtreePath.findFirstIn(read(p)).isDefined
     assert(spellsSink(sink), s"$sink no longer owns the sink — the walk is looking elsewhere")
     val copies = scalaSources(root).filter(p => p != sink && spellsSink(p))
     assert(copies.isEmpty,
       s"hand-copied exactly-once sinks (use Tables.landBatch): ${copies.mkString(", ")}")
+    // nor does any main source, Tables included, bring back the batch id
+    // as a partition column of the write: as a column it is a literal in
+    // the plan, and every trigger compiles its write again
+    val columnLayout = """partitionOverwriteMode|partitionBy\("batch_id"""".r
+    val columnSinks = scalaSources(root).filter(p => columnLayout.findFirstIn(read(p)).isDefined)
+    assert(columnSinks.isEmpty,
+      s"batch_id written as a column (land through Tables.landBatch): ${columnSinks.mkString(", ")}")
   }
 
   test("recoverCrashedSwap and stagingSwap appear in no main source but Tables.scala") {

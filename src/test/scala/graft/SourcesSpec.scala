@@ -185,6 +185,97 @@ class SourcesSpec extends AnyFunSuite with SparkTestBase {
     assert(Tables.readPartitioned(spark, dir).count() === 100000)
   }
 
+  test("A6e a replay replaces its whole batch: a leaf the replay no longer reaches keeps no rows") {
+    import spark.implicits._
+    val dir = tmpDir("graft_eo_replay")
+    val ts = java.sql.Timestamp.valueOf("2024-01-15 10:00:00")
+    val first = Seq(("t1", "card", 10.0, ts), ("t2", "cash", 20.0, ts))
+    def batch(rows: Seq[(String, String, Double, java.sql.Timestamp)]) =
+      rows.toDF("transaction_id", "payment_method", "amount", "timestamp")
+    Tables.writeDatePartitionedExactlyOnce(batch(first), "timestamp", dir, batchId = 0)
+    // the replay of batch 0 computes only the card row this time
+    Tables.writeDatePartitionedExactlyOnce(batch(first.take(1)), "timestamp", dir, batchId = 0)
+    val back = Tables.readPartitioned(spark, dir)
+    assert(back.filter(col("payment_method") === "cash").count() === 0,
+      "the replay left the first attempt's cash leaf in place")
+    assert(back.select("transaction_id").as[String].collect().toSeq === Seq("t1"))
+  }
+
+  /** 2,000 transactions over two payment methods and three days, as
+    * parquet under a fresh dir: a file-sourced frame, as a stream's
+    * micro-batch is (a local `Seq` frame is folded into the plan).
+    */
+  private def txFiles(prefix: String): String = {
+    val input = tmpDir(prefix) + "/tx"
+    spark.range(0, 2000, 1, 4)
+      .select(concat(lit("t"), col("id")).as("transaction_id"),
+        when(col("id") % 2 === 0, "card").otherwise("cash").as("payment_method"),
+        col("id").cast("double").as("amount"),
+        timestamp_seconds(lit(1705312800L) + col("id") % 3 * 86400).as("timestamp"))
+      .write.parquet(input)
+    input
+  }
+
+  test("A6f landing a warm batch compiles nothing: the batch id is in the path, not in the plan") {
+    val input = txFiles("graft_land_codegen")
+    val (dated, plain) = (tmpDir("graft_land_dated"), tmpDir("graft_land_plain"))
+    // the counter ticks once per Janino compile; codegen cache hits do not count
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def compiledPerBatch(land: (org.apache.spark.sql.DataFrame, Long) => Unit): Seq[Long] =
+      (0L until 4L).map { id =>
+        val c0 = compiles.getCount
+        land(spark.read.parquet(input), id)
+        compiles.getCount - c0
+      }
+    val datedCounts = compiledPerBatch(Tables.writeDatePartitionedExactlyOnce(_, "timestamp", dated, _))
+    val plainCounts = compiledPerBatch(Tables.landBatch(_, plain, _))
+    info(s"classes compiled per batch: dated $datedCounts, no partition columns $plainCounts")
+    assert(datedCounts.tail.forall(_ == 0),
+      s"warm batches compiled classes (dated sink): $datedCounts")
+    assert(plainCounts.tail.forall(_ == 0),
+      s"warm batches compiled classes (no partition columns): $plainCounts")
+    for (dir <- Seq(dated, plain)) {
+      val back = Tables.readPartitioned(spark, dir)
+      assert(back.count() === 8000)
+      assert(back.select("batch_id").distinct().count() === 4)
+    }
+  }
+
+  test("A6g an empty batch between two landed batches changes no reader's rows or schema; compaction still skips") {
+    val input = txFiles("graft_land_empty")
+    def tx = spark.read.parquet(input)
+    // empty at run time, as a micro-batch is: not folded away in the plan
+    def nothing = tx.filter(col("amount") < 0)
+    def files(dir: String): Set[String] = {
+      val root = Paths.get(dir)
+      import scala.jdk.CollectionConverters._
+      scala.util.Using.resource(Files.walk(root))(_.iterator().asScala
+        .filter(Files.isRegularFile(_)).map(root.relativize(_).toString).toSet)
+    }
+    def rows(dir: String): Seq[String] =
+      Tables.readPartitioned(spark, dir).collect().map(_.toString).sorted.toSeq
+    // each layout with the columns its nightly compaction names
+    val layouts: Seq[(String, (org.apache.spark.sql.DataFrame, String, Long) => Unit, Seq[String])] = Seq(
+      ("dated", Tables.writeDatePartitionedExactlyOnce(_, "timestamp", _, _),
+        Seq("payment_method", "tx_year", "tx_month", "tx_day")),
+      ("no partition columns", Tables.landBatch(_, _, _), Nil))
+    for ((layout, land, compactCols) <- layouts) {
+      val (withEmpty, without) = (tmpDir("graft_land_with_empty"), tmpDir("graft_land_without"))
+      land(tx, withEmpty, 0L)
+      land(nothing, withEmpty, 1L)
+      land(tx.filter(col("transaction_id") =!= "t0"), withEmpty, 2L)
+      land(tx, without, 0L)
+      land(tx.filter(col("transaction_id") =!= "t0"), without, 2L)
+      assert(Tables.readPartitioned(spark, withEmpty).schema ===
+        Tables.readPartitioned(spark, without).schema, s"$layout: the empty batch changed the schema")
+      assert(rows(withEmpty) === rows(without), s"$layout: the empty batch changed the rows")
+      val landed = files(withEmpty)
+      assert(!landed.exists(_.endsWith("_SUCCESS")), s"$layout: a batch subtree holds a job marker")
+      Tables.compactPartitioned(spark, withEmpty, compactCols)
+      assert(files(withEmpty) === landed, s"$layout: compaction rewrote an already-compact table")
+    }
+  }
+
   test("A16 ORC round-trip: schema'd read-back is exact; filters push to the ORC scan") {
     val dir = tmpDir("graft_orc")
     val docs = Tables.table(spark, SF, "documents")
